@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -119,18 +120,34 @@ object ScaleProbe {
         s""""cartesians":$cartesians,"nested_loops":$nestedLoops}"""
   }
 
-  def shape(plan: SparkPlan): PlanShape = PlanShape(
-    exchanges = plan.collect { case e: ShuffleExchangeExec => e }.size,
-    broadcasts = plan.collect { case b: BroadcastExchangeExec => b }.size,
-    sorts = plan.collect { case s: SortExec => s }.size,
-    scans = plan.collect { case f: FileSourceScanExec => f }.size,
-    codegen = plan.collect { case w: WholeStageCodegenExec => w }.size,
-    windows = plan.collect { case w: WindowExec => w }.size,
-    globalWindows = plan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty => w
-    }.size,
-    cartesians = plan.collect { case c: CartesianProductExec => c }.size,
-    nestedLoops = plan.collect { case n: BroadcastNestedLoopJoinExec => n }.size)
+  /** Every operator of `plan` as it runs. An AQE root is a leaf to Spark's
+    * tree API (a plain `collect` over it counts nothing), so descend into
+    * its FINAL plan — which materializes the query stages — and into each
+    * query stage's exchange. A reused exchange stays a leaf: it ran once,
+    * where it was first planned (PlanCensus counts it the same way).
+    */
+  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => nodes(a.finalPhysicalPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case p => p +: p.children.flatMap(nodes)
+  }
+
+  def shape(plan: SparkPlan): PlanShape = {
+    val ns = nodes(plan)
+    PlanShape(
+      exchanges = ns.count(_.isInstanceOf[ShuffleExchangeExec]),
+      broadcasts = ns.count(_.isInstanceOf[BroadcastExchangeExec]),
+      sorts = ns.count(_.isInstanceOf[SortExec]),
+      scans = ns.count(_.isInstanceOf[FileSourceScanExec]),
+      codegen = ns.count(_.isInstanceOf[WholeStageCodegenExec]),
+      windows = ns.count(_.isInstanceOf[WindowExec]),
+      globalWindows = ns.count {
+        case w: WindowExec => w.partitionSpec.isEmpty
+        case _ => false
+      },
+      cartesians = ns.count(_.isInstanceOf[CartesianProductExec]),
+      nestedLoops = ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+  }
 
   private def release(spark: SparkSession): Unit = {
     graft.operators.Persisted.releaseAll(spark)
@@ -149,6 +166,8 @@ object ScaleProbe {
       release(spark)
       dt
     }
+    // untimed: under AQE the shape walk runs the query's stages, because
+    // the final plan exists only once they have materialized
     val sh = shape(fn(spark, dir).queryExecution.executedPlan)
     release(spark)
     pass() // warm (JIT, codegen cache, parquet footers)

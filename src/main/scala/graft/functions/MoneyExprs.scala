@@ -27,11 +27,12 @@ import org.apache.spark.sql.types._
   * plain-double 0.250 s, double→decimal 0.578 s, long→decimal 0.406 s,
   * plain-long 0.241 s, this 0.26 s).
   *
-  * Exactness domain: per-row |value| ≤ 2⁴⁰ (the 2-dp money grid gives
-  * ≤ ~1.3e9 for price×(100−disc) products — 19 bits spare), |total| <
-  * 2⁶³·2⁵⁹ ≈ 5.3e36 (a 100 TB corpus money sum is ~1e22 — fourteen
-  * orders of headroom). Within it the result is the EXACT integer sum at
-  * any partitioning, any merge order: bit-identical to
+  * Exactness domain (the one contract; [[SumCents.sum]] repeats it for
+  * callers): per-row |value| ≤ 2⁴⁷ (the 2-dp money grid gives ≤ ~1.3e9
+  * ≈ 2³¹ for price×(100−disc) products), |total| < 2⁶³·2⁵⁹ ≈ 5.3e36 (a
+  * 100 TB corpus money sum is ~1e22 — fourteen orders of headroom).
+  * Within it the result is the EXACT integer sum at any partitioning,
+  * any merge order: bit-identical to
   * `sum(cents.cast("decimal(38,0)"))`, so every ExactMoney DuckDB twin
   * (textual `sum(CAST(round(x*100) AS BIGINT))` oracles) remains valid
   * unchanged.
@@ -60,7 +61,7 @@ case class SumCents(child: Expression)
   override lazy val aggBufferAttributes: Seq[AttributeReference] =
     Seq(lo, hi, cnt)
 
-  /** Quantum: |lo| is kept ≤ 2⁵⁹, far above any row value (≤ 2⁴⁰) and far
+  /** Quantum: |lo| is kept ≤ 2⁵⁹, far above any row value (≤ 2⁴⁷) and far
     * below long wrap (2⁶³) even after a merge of two full halves. */
   private val Q = 1L << 59
 
@@ -108,13 +109,13 @@ object SumCents {
   /** Column form: exact decimal(38,0) sum of a BIGINT integer-units
     * column, long-fast-path per row.
     *
-    * EXACTNESS DOMAIN (callers must hold it; unchecked for speed): the
-    * per-row |value| must stay far enough below 2⁶³ − 2⁵⁹ that `lo + v`
-    * cannot wrap before the carry check — every in-repo site feeds
-    * ≤ ~2⁴⁷ (cents, basis-point products, mod-P row hashes, squared
-    * cents), leaving ≥ 15 bits of headroom. A site near 2⁶² per row
-    * needs the plain decimal(38,0) sum instead (see q_cms_join_est /
-    * q_gini, which keep it for exactly that reason). */
+    * EXACTNESS DOMAIN (callers must hold it; unchecked for speed): per-row
+    * |value| ≤ 2⁴⁷, the same contract as the class doc — every in-repo
+    * site (cents, basis-point products, mod-P row hashes, squared cents)
+    * stays there. The hard wrap limit is 2⁶³ − 2⁵⁹ (`lo + v` must not wrap
+    * before the carry check), so 2⁴⁷ leaves ≥ 15 bits of headroom. A site
+    * beyond 2⁴⁷ per row needs the plain decimal(38,0) sum instead (see
+    * q_cms_join_est / q_gini, which keep it for exactly that reason). */
   def sum(c: Column): Column =
     Bridge.column(SumCents(Bridge.expression(c)).toAggregateExpression())
 

@@ -84,7 +84,9 @@ object GraphOps {
         // job as chained stages (the marked RDDs still cache on first
         // computation, so the per-round broadcast build of nRow cannot
         // re-run earlier rounds). Loops whose round derives a scalar
-        // broadcast FROM the loop frame (q_hits) must stay eager.
+        // broadcast FROM the loop frame (q_hits) are lazy too: the
+        // max-broadcast build is the first action on the marked frame, so
+        // the mark caches it there and the join consumer reads its blocks.
         pr = ew.join(pr, ew("src") === pr("node"))
           .groupBy(col("dst"))
           .agg(sum(col("pr") / col("outdeg")).as("m"))

@@ -25,6 +25,10 @@ object VectorOps {
 
   private def emb(s: SparkSession, d: String) = Tables(s, d, "embeddings")
 
+  /** (vec_id, vd): the embeddings as double[64], persisted via the ledger. */
+  private def embD(s: SparkSession, d: String): DataFrame = emb(s, d).select(col("vec_id"),
+    transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+
   val queries: Map[String, Q] = Map(
     // ---- per-vector stats (the oracle anchor for the vector column) ----
     "q_embed_stats" -> ((s, d) =>
@@ -341,23 +345,17 @@ object VectorOps {
     // ---- incremental PQ index maintenance (the vector-index analog of
     //      q_ivm_rollup): a new vector batch (vec_id % 10 == 9) is coded
     //      against the EXISTING codebooks — trained on the old corpus
-    //      only, broadcast, never retrained — so the append touches
-    //      |batch| rows while the index stays serviceable. Output is the
-    //      per-(subspace, centroid) census after the append; a drifting
-    //      batch shows up as mass imbalance here, which is the signal a
-    //      production index uses to schedule retraining ----
+    //      only, broadcast keyed on m, never retrained — so the append
+    //      touches |batch| rows while the index stays serviceable. Output
+    //      is the per-(subspace, centroid) census after the append; a
+    //      drifting batch shows up as mass imbalance here, which is the
+    //      signal a production index uses to schedule retraining ----
     "q_pq_append" -> ((s, d) => {
-      val all = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+      val all = embD(s, d)
       val old = all.filter(col("vec_id") % 10 =!= 9)
       val nb = all.filter(col("vec_id") % 10 === 9)
       val (oldAssign, codebooks) = pqAssignmentsFrom(old)
-      val newAssign = (0 until 4).map { mi =>
-        assignToCodebook(
-          nb.select(col("vec_id"), slice(col("vd"), mi * 16 + 1, 16).as("sv")),
-          codebooks(mi))
-          .select(col("vec_id"), lit(mi).as("m"), col("cid"))
-      }.reduce(_ unionByName _)
+      val newAssign = assignToCodebook(subvectors(nb), codebooks)
       oldAssign.groupBy(col("m"), col("cid"))
         .agg(count(lit(1)).as("n_old"))
         .join(newAssign.groupBy(col("m"), col("cid"))
@@ -448,12 +446,14 @@ object VectorOps {
     //      Lloyd step, centroids rounded 6dp — the q_ann_ivf recipe per
     //      subspace); every vector compresses to a 4-symbol code (its
     //      nearest centroid per subspace) plus its total reconstruction
-    //      error. Scale shape: codebooks are K×M-row broadcasts, assignment
-    //      is per-row against them — the corpus is never shuffled; the
-    //      code (4 bytes here vs 256 for float32) is what a 100 TB vector
-    //      index stores ----
+    //      error. Scale shape: one plan keyed by subspace m — the corpus
+    //      explodes into (vec_id, m, sv) rows, the codebook is one
+    //      (m, cid, cvec) frame broadcast as one row per subspace and
+    //      hash-joined on m, assignment is per-row against it — the corpus
+    //      is never shuffled; the code (4 bytes here vs 256 for float32)
+    //      is what a 100 TB vector index stores ----
     "q_embed_pq" -> ((s, d) => {
-      val (assignments, _) = pqAssignments(emb(s, d))
+      val (assignments, _) = pqAssignmentsFrom(embD(s, d))
       assignments
         .groupBy(col("vec_id"))
         .agg(concat_ws("-",
@@ -465,16 +465,17 @@ object VectorOps {
 
     // ---- PQ ANN search (asymmetric distance computation, the consumer of
     //      q_embed_pq's codes): each probe precomputes a 4×8 lookup table
-    //      of subspace distances to every codebook centroid (tiny —
-    //      probes × 32 rows — broadcast), and a corpus vector's approximate
-    //      distance is the 4-term SUM OF TABLE LOOKUPS over its code: a
-    //      sequential HOF fold per row against broadcast state, so the
-    //      corpus is scanned once with NO shuffle before the final top-k
-    //      window. This is exactly how a PQ index serves queries at 100 TB:
-    //      codes live columnar, floats never touched at query time ----
+    //      of subspace distances to every codebook centroid (its
+    //      subvectors join the codebook broadcast on m; the table, one
+    //      32-entry map per probe, is broadcast), and a corpus vector's
+    //      approximate distance is the 4-term SUM OF TABLE LOOKUPS over its
+    //      code: a sequential HOF fold per row against broadcast state, so
+    //      the corpus is scanned once with NO shuffle before the final
+    //      top-k window. This is exactly how a PQ index serves queries at
+    //      100 TB: codes live columnar, floats never touched at query
+    //      time ----
     "q_ann_pq" -> ((s, d) => {
-      val e = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+      val e = embD(s, d)
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("adist").asc, col("neighbor_id").asc)
       adcDistances(e)
@@ -494,8 +495,7 @@ object VectorOps {
     //      is recovered exactly where it matters, at the top of the
     //      ranking (VectorSpec quantifies the recall win vs raw ADC) ----
     "q_ann_pq_rerank" -> ((s, d) => {
-      val e = emb(s, d).select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+      val e = embD(s, d)
       val wa = Window.partitionBy(col("probe_id"))
         .orderBy(col("adist").asc, col("neighbor_id").asc)
       val shortlist = adcDistances(e)
@@ -750,8 +750,9 @@ object VectorOps {
 
   /** ADC approximate distances (probe_id, neighbor_id, adist) — the shared
     * core of q_ann_pq and q_ann_pq_rerank: per-probe 4×8 distance LUT
-    * against the broadcast codebooks, corpus distance = 4 table lookups via
-    * a sequential HOF fold per row. The LUT is DENSELY keyed by m*8 + cid
+    * against the codebook broadcast keyed on m (the same broadcast the
+    * final assignment probes), corpus distance = 4 table lookups via a
+    * sequential HOF fold per row. The LUT is DENSELY keyed by m*8 + cid
     * in a map — a positional array would silently shift every later index
     * if a degenerate codebook dropped a memberless centroid (the DuckDB
     * oracle joins on (m, cid) and would diverge); keyed entries stay
@@ -763,19 +764,13 @@ object VectorOps {
     val codesWide = assignments.groupBy(col("vec_id"))
       .agg(transform(array_sort(collect_list(struct(col("m"), col("cid")))),
         _.getField("cid")).as("code"))
-    val probes = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("vd"))
-    val lutRows = (0 until 4).map { mi =>
-      probes.select(col("probe_id"),
-          slice(col("vd"), mi * 16 + 1, 16).as("psv"))
-        .crossJoin(broadcast(codebooks(mi)))
-        .select(col("probe_id"), lit(mi).as("m"), col("cid"),
-          VectorExprs.l2DistSq(col("psv"), col("cvec")).as("pdist"))
-    }.reduce(_ unionByName _)
-    val lutWide = lutRows.groupBy(col("probe_id"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("m") * 8 + col("cid")).cast("int").as("k"), col("pdist"))))
-        .as("lut"))
+    val lutWide = subvectors(e.filter(col("vec_id") < 10))
+      .join(broadcast(codebookRows(codebooks)), "m")
+      .select(col("vec_id").as("probe_id"), transform(col("cs"), c => struct(
+        (col("m") * 8 + c.getField("cid")).cast("int").as("k"),
+        VectorExprs.l2DistSq(col("sv"), c.getField("cvec")).as("pdist"))).as("es"))
+      .groupBy(col("probe_id"))
+      .agg(map_from_entries(flatten(collect_list(col("es")))).as("lut"))
     codesWide.crossJoin(broadcast(lutWide))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
@@ -785,59 +780,63 @@ object VectorOps {
           .as("adist"))
   }
 
-  /** Product-quantization codebooks + assignments: 4 subspaces of 16 dims,
-    * 8 deterministic centroids each (init = first 8 vectors' subvectors,
-    * one Lloyd step, centroids rounded 6dp — q_ann_ivf's recipe per
-    * subspace). Returns the (vec_id, m, cid, dist) assignment frame and the
-    * per-subspace codebook frames (cid, cvec).
+  /** (vec_id, m, sv): a (vec_id, vd) frame exploded into its 4 subvectors
+    * of 16 dims. Every PQ stage is ONE plan keyed by m over this frame:
+    * per-subspace copies differ only in literals Spark inlines into
+    * generated code, so each would plan its own broadcasts and jobs and
+    * compile its own classes.
     */
-  private def pqAssignments(embDf: DataFrame): (DataFrame, Seq[DataFrame]) =
-    pqAssignmentsFrom(embDf.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked())
+  private def subvectors(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), explode(transform(sequence(lit(0), lit(3)), mi =>
+        struct(mi.as("m"), slice(col("vd"), mi * 16 + 1, lit(16)).as("sv")))).as("s"))
+      .select(col("vec_id"), col("s.m").as("m"), col("s.sv").as("sv"))
 
-  /** Nearest-centroid assignment of a (vec_id, sv) frame against a
-    * broadcast (cid, cvec) codebook — shared by the index build and the
-    * APPEND path (new vectors coded against fixed codebooks, no retrain).
+  /** (m, cs): one row per subspace — the broadcast side of every codebook join. */
+  private def codebookRows(codebooks: DataFrame): DataFrame =
+    codebooks.groupBy(col("m"))
+      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cs"))
+
+  /** Nearest-centroid assignment of a (vec_id, m, sv) frame against an
+    * (m, cid, cvec) codebook — shared by the index build and the APPEND
+    * path (new vectors coded against fixed codebooks, no retrain).
     *
-    * MAP-ONLY: the codebook is folded into ONE broadcast row and the
-    * argmin is a pure projection — a per-row sort of k (dist, cid)
-    * structs, tie-broken on cid exactly like the row_number() window this
-    * replaced. The old shape expanded k rows per vector and shuffled the
-    * corpus onto vec_id for the window sort; assignment now has no
-    * exchange at all (PlanSpec asserts it), which is the difference
-    * between a map stage and a corpus shuffle at 100 TB.
+    * MAP-ONLY: the codebook is folded into one row per subspace, joined
+    * as a broadcast hash join on m, and the argmin is a pure projection —
+    * a per-row sort of k (dist, cid) structs, tie-broken on cid exactly
+    * like the row_number() window this replaced. The old shape expanded k
+    * rows per vector and shuffled the corpus onto vec_id for the window
+    * sort; assignment now has no exchange at all (PlanSpec asserts it),
+    * which is the difference between a map stage and a corpus shuffle at
+    * 100 TB.
     */
-  private def assignToCodebook(sv: DataFrame, cents: DataFrame): DataFrame = {
-    val centsRow = cents.agg(
-      collect_list(struct(col("cid"), col("cvec"))).as("cs"))
-    sv.crossJoin(broadcast(centsRow))
-      .select(col("vec_id"), col("sv"),
+  private def assignToCodebook(sv: DataFrame, codebooks: DataFrame): DataFrame =
+    sv.join(broadcast(codebookRows(codebooks)), "m")
+      .select(col("vec_id"), col("m"), col("sv"),
         element_at(array_sort(transform(col("cs"), c =>
           struct(VectorExprs.l2DistSq(col("sv"), c.getField("cvec")).as("dist"),
             c.getField("cid").as("cid")))), 1).as("best"))
-      .select(col("vec_id"), col("sv"),
+      .select(col("vec_id"), col("m"), col("sv"),
         col("best.cid").as("cid"), col("best.dist").as("dist"))
-  }
 
-  private def pqAssignmentsFrom(e: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val m = 4; val sub = 16; val k = 8
-    val perSub = (0 until m).map { mi =>
-      val sv = e.select(col("vec_id"), slice(col("vd"), mi * sub + 1, sub).as("sv"))
-      def assign(cents: DataFrame): DataFrame = assignToCodebook(sv, cents)
-      val init = sv.filter(col("vec_id") < k)
-        .select(col("vec_id").cast("int").as("cid"), col("sv").as("cvec"))
-      val cents1 = assign(init)
-        .select(col("cid"), posexplode(col("sv")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("dim"))
-        .agg(round(avg(col("v")), 6).as("cv"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
-          _.getField("cv")).as("cvec"))
-      (assign(cents1)
-        .select(col("vec_id"), lit(mi).as("m"), col("cid"), col("dist")),
-        cents1)
-    }
-    (perSub.map(_._1).reduce(_ unionByName _), perSub.map(_._2))
+  /** Product-quantization codebooks + assignments of a (vec_id, vd) frame:
+    * 4 subspaces of 16 dims, 8 deterministic centroids each (init = first
+    * 8 vectors' subvectors, one Lloyd step, centroids rounded 6dp —
+    * q_ann_ivf's recipe per subspace). Returns the (vec_id, m, cid, dist)
+    * assignment frame and the (m, cid, cvec) codebook frame.
+    */
+  private def pqAssignmentsFrom(e: DataFrame): (DataFrame, DataFrame) = {
+    val sv = subvectors(e)
+    val init = sv.filter(col("vec_id") < 8) // k = 8 centroids per subspace
+      .select(col("m"), col("vec_id").cast("int").as("cid"), col("sv").as("cvec"))
+    val cents1 = assignToCodebook(sv, init)
+      .select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("dim", "v")))
+      .groupBy(col("m"), col("cid"), col("dim"))
+      .agg(round(avg(col("v")), 6).as("cv"))
+      .groupBy(col("m"), col("cid"))
+      .agg(transform(array_sort(collect_list(struct(col("dim"), col("cv")))),
+        _.getField("cv")).as("cvec"))
+    (assignToCodebook(sv, cents1).select(col("vec_id"), col("m"), col("cid"), col("dist")),
+      cents1)
   }
 
   /** Mid-square-LCG JL sign: true ⇒ +x_j in output dim i (see
@@ -911,8 +910,7 @@ object VectorOps {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorExprs
     val k = 16
-    val e = emb(s, d).select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+    val e = embD(s, d)
     // map-only nearest-centroid assignment: codebook folded to ONE
     // broadcast row, per-vector argmin as a pure projection (sorted
     // (dist, cid) structs — same tie-break as the row_number() window it

@@ -870,13 +870,32 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // row_number window — a Window partitioned on vec_id reappearing in
     // any of these plans means the assignment stage regressed from a map
     // stage back to a corpus shuffle
-    Seq("q_ann_ivf", "q_ivf_tuning", "q_embed_pq", "q_pq_append").foreach { n =>
+    Seq("q_ann_ivf", "q_ivf_tuning", "q_embed_pq", "q_pq_append",
+        "q_ann_pq", "q_ann_pq_rerank").foreach { n =>
       val vecWins = physical(n).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if w.partitionSpec.exists(_.toString.contains("vec_id")) => w
       }
       assert(vecWins.isEmpty,
         s"$n: assignment-stage window partitioned on vec_id: $vecWins")
+    }
+  }
+
+  test("PQ family is one plan keyed by subspace m: no Union, codebook broadcast on m") {
+    // the four 16-dim subspaces are rows of one (vec_id, m, sv) frame, not
+    // four literal-specialized plan copies unioned — each copy ran its own
+    // broadcasts and jobs and compiled its own codegen classes. The
+    // codebook (one row per m) must reach the subvectors as a broadcast
+    // hash join on m, never a per-subspace cross join.
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    Seq("q_embed_pq", "q_ann_pq", "q_ann_pq_rerank", "q_pq_append").foreach { n =>
+      val unions = optimized(n).collect { case u: Union => u }.size
+      assert(unions == 0, s"$n: optimized plan has $unions Union(s)")
+      val onM = physical(n).collect {
+        case b: BroadcastHashJoinExec
+            if b.leftKeys.exists(_.references.exists(_.name == "m")) => b
+      }
+      assert(onM.nonEmpty, s"$n: no broadcast hash join keyed on m")
     }
   }
 
