@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line the driver parses.
@@ -37,16 +36,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cores
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
     // Calibration anchor: a fixed pure-CPU workload (no I/O, no shuffle)
     // timed at bench start. Identical code measured across sessions varies
     // ±16% uniformly with host CPU steal (PLANS.md §8b); dividing totals by
@@ -55,7 +47,7 @@ object Bench {
     def calibPass(): Double = {
       import org.apache.spark.sql.functions.{col, sum}
       val t0 = System.nanoTime()
-      spark.range(0, 400000000L, 1, cpus.toInt)
+      spark.range(0, 400000000L, 1, cpus)
         .select(sum(col("id") * 2654435761L % 1000003L)).head
       (System.nanoTime() - t0) / 1e9
     }
@@ -75,7 +67,7 @@ object Bench {
       import org.apache.spark.sql.functions.{col, expr, sum}
       def pass(): Double = {
         val t0 = System.nanoTime()
-        spark.range(0, 750000L, 1, cpus.toInt)
+        spark.range(0, 750000L, 1, cpus)
           .select(
             expr("transform(sequence(0, 63), j -> " +
               "CAST(pmod(id * 2654435761 + j * 40503, 997) / 997.0 AS FLOAT))")
@@ -90,8 +82,6 @@ object Bench {
       pass()
       Seq.fill(3)(pass()).sorted.apply(1)
     }
-    // Force full computation of every operator: count() would let Catalyst
-    // prune projections away; the noop sink executes the real plan.
     // benchOnly entries (engine-specific values, production-shape cost —
     // e.g. the sketch-only HLL plan) are timed alongside the gated set.
     // optional args: bench only these queries (local iteration aid; the
@@ -99,9 +89,6 @@ object Bench {
     val only = args.toSet
     val allQueries = (SparkEntry.queries ++ SparkEntry.benchOnly)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    def run(name: String): Unit =
-      allQueries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
     // A query that throws must be VISIBLE in the artifact, not just in the
     // correctness gate: a broken body returns in ~ms, scores near-0s, and
     // silently flatters the total (r10 verdict finding). Every caught
@@ -110,27 +97,19 @@ object Bench {
     // computed over failure-speed samples is meaningless).
     val failures = scala.collection.mutable.Map.empty[String, Int]
       .withDefaultValue(0)
+    // a failed pass's sample is its time to the throw (plus the release)
     def timedPass(name: String): Double = {
       val t0 = System.nanoTime()
-      try run(name) catch { case _: Throwable => failures(name) += 1 }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop this query's persists before the next: the ledger releases
-      // exactly what the body registered; clearCache backstops anything
-      // cached outside the tracked path
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
-      dt
+      try Harness.timedPass(spark)(allQueries(name)(spark, sfDir))
+      catch { case _: Throwable =>
+        failures(name) += 1
+        (System.nanoTime() - t0) / 1e9
+      }
     }
     val calib = calibrate()
     val calibFp = calibrateFp()
     val names = allQueries.keys.toSeq.sorted
-    names.foreach { n => // warm pass (failures counted here too)
-      try run(n) catch { case _: Throwable => failures(n) += 1 }
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
-    }
+    names.foreach(timedPass) // warm pass (failures counted here too)
     // Interleave passes round-robin (pass 0 of all queries, then pass 1, ...)
     // so per-query samples are spread across the session: a slow phase (GC,
     // codegen-cache churn) late in the run taxes one sample of many queries

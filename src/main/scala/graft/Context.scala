@@ -61,13 +61,6 @@ class Context(val spark: SparkSession) {
 
 object Context {
   /** Standalone session with the project's standard config. */
-  def local(cores: Int = 4): Context = new Context(
-    SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+  def local(cores: Int = Harness.cores): Context =
+    new Context(Harness.session(cores))
 }

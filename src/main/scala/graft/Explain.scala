@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print the formatted physical plan and wall time of one
   * named query. `runMain graft.Explain <queryName> [sfDir]`.
   *
@@ -12,31 +10,12 @@ import org.apache.spark.sql.SparkSession
   * writes `<outDir>/<query>_<suffix>.txt` for each query.
   */
 object Explain {
-  private def mkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Formatted physical plan as a string (what df.explain("formatted")
     * prints), via the classic Dataset's queryExecution. */
   private def formatted(df: org.apache.spark.sql.DataFrame): String =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution
       .explainString(org.apache.spark.sql.execution.FormattedMode)
-
-  private def releaseAll(spark: SparkSession): Unit = {
-    graft.operators.Persisted.releaseAll(spark)
-    graft.plans.RollupRewrite.clear(spark)
-    spark.catalog.clearCache()
-  }
 
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0) == "--dump") {
@@ -47,23 +26,16 @@ object Explain {
       }
       val Array(_, outDir, suffix, sfDir) = args.take(4)
       val names = args.drop(4)
-      val spark = mkSession()
+      val spark = Harness.session(Harness.cores)
       val all = SparkEntry.queries ++ SparkEntry.benchOnly
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.foreach { name =>
         val plan = formatted(all(name)(spark, sfDir))
-        def pass(): Double = {
-          val t0 = System.nanoTime()
-          all(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          releaseAll(spark)
-          dt
-        }
+        def pass(): Double = Harness.timedPass(spark)(all(name)(spark, sfDir))
         val cold = pass()
         val warm = pass()
         val hdr = f"-- $name @ $sfDir cold=$cold%.2fs warm=$warm%.2fs" +
-          s" cpus=${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}\n"
+          s" cpus=${Harness.cores}\n"
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), hdr + plan)
         println(f"[explain] $name cold=$cold%.2fs warm=$warm%.2fs")
@@ -73,16 +45,13 @@ object Explain {
     }
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = mkSession()
+    val spark = Harness.session(Harness.cores)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    println(f"[explain] $name cold run: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val t1 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    println(f"[explain] $name warm run: ${(System.nanoTime() - t1) / 1e9}%.2f s")
+    val cold = Harness.timedPass(spark)(df)
+    println(f"[explain] $name cold run: $cold%.2f s")
+    val warm = Harness.timedPass(spark)(SparkEntry.queries(name)(spark, sfDir))
+    println(f"[explain] $name warm run: $warm%.2f s")
     spark.stop()
   }
 }

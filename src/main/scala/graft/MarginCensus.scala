@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Average, Max, Min, Sum}
@@ -291,15 +291,7 @@ object MarginCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "MARGIN_CENSUS.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     var totalAll = 0; var totalMeasured = 0; var totalRisky = 0
     val flags = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -355,11 +347,7 @@ object MarginCensus {
           s"""{"error":"${e.getClass.getSimpleName}: ${
             Option(e.getMessage).getOrElse("").take(120)
               .replace("\\", "\\\\").replace("\"", "'").replace("\n", " ")}"}"""
-      } finally {
-        graft.operators.Persisted.releaseAll(spark)
-        graft.plans.RollupRewrite.clear(spark)
-        spark.catalog.clearCache()
-      }
+      } finally Harness.release(spark)
       s"""  "$name": $cell"""
     }
     def arr(xs: Seq[String]): String =

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 
 /** Plan-fingerprint census: one JSON object per gated query counting the
   * scale-critical physical operators in its fully-PREPARED static plan
@@ -86,41 +83,25 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLAN_CENSUS.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores,
+      "spark.sql.adaptive.enabled" -> "false")
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
       val cell =
         try {
           val plan = fn(spark, sfDir).queryExecution.executedPlan
-          val scans = plan.collect { case f: FileSourceScanExec => f }.size
-          val exch = plan.collect { case e: ShuffleExchangeExec => e }.size
-          val bc = plan.collect { case b: BroadcastExchangeExec => b }.size
-          val sorts = plan.collect { case s: SortExec => s }.size
-          val wsc = plan.collect { case w: WholeStageCodegenExec => w }.size
-          val wins = plan.collect { case w: WindowExec => w }.size
+          val sh = Harness.shape(plan)
           val hugeLimit =
             spark.conf.get("spark.sql.codegen.hugeMethodLimit", "65535").toInt
           val fb = codegenFallbacks(plan, hugeLimit)
           val fpAggs = doubleAggs(plan)
-          s"""{"scans":$scans,"exchanges":$exch,"broadcasts":$bc,""" +
-            s""""sorts":$sorts,"codegen_spans":$wsc,"windows":$wins,""" +
+          s"""{"scans":${sh.scans},"exchanges":${sh.exchanges},""" +
+            s""""broadcasts":${sh.broadcasts},"sorts":${sh.sorts},""" +
+            s""""codegen_spans":${sh.codegen},"windows":${sh.windows},""" +
             s""""codegen_fallbacks":$fb,"double_aggs":$fpAggs}"""
         } catch {
           case e: Throwable =>
             s"""{"error":"${e.getClass.getSimpleName}"}"""
-        } finally {
-          graft.operators.Persisted.releaseAll(spark)
-          graft.plans.RollupRewrite.clear(spark)
-          spark.catalog.clearCache()
-        }
+        } finally Harness.release(spark)
       s"""  "$n": $cell"""
     }
     val json = "{\n" + rows.mkString(",\n") + "\n}\n"

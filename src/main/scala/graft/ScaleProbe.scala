@@ -1,11 +1,7 @@
 package graft
 
+import graft.Harness.PlanShape
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** sf1 scaling probe (r15 verdict item 4): measures how the top-cost query
@@ -109,67 +105,15 @@ object ScaleProbe {
 
   // ---------------------------------------------------------------- run
 
-  final case class PlanShape(exchanges: Int, broadcasts: Int, sorts: Int,
-                             scans: Int, codegen: Int, windows: Int,
-                             globalWindows: Int, cartesians: Int,
-                             nestedLoops: Int) {
-    def json: String =
-      s"""{"exchanges":$exchanges,"broadcasts":$broadcasts,""" +
-        s""""sorts":$sorts,"scans":$scans,"codegen_spans":$codegen,""" +
-        s""""windows":$windows,"global_windows":$globalWindows,""" +
-        s""""cartesians":$cartesians,"nested_loops":$nestedLoops}"""
-  }
-
-  /** Every operator of `plan` as it runs. An AQE root is a leaf to Spark's
-    * tree API (a plain `collect` over it counts nothing), so descend into
-    * its FINAL plan — which materializes the query stages — and into each
-    * query stage's exchange. A reused exchange stays a leaf: it ran once,
-    * where it was first planned (PlanCensus counts it the same way).
-    */
-  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
-    case a: AdaptiveSparkPlanExec => nodes(a.finalPhysicalPlan)
-    case q: QueryStageExec => nodes(q.plan)
-    case p => p +: p.children.flatMap(nodes)
-  }
-
-  def shape(plan: SparkPlan): PlanShape = {
-    val ns = nodes(plan)
-    PlanShape(
-      exchanges = ns.count(_.isInstanceOf[ShuffleExchangeExec]),
-      broadcasts = ns.count(_.isInstanceOf[BroadcastExchangeExec]),
-      sorts = ns.count(_.isInstanceOf[SortExec]),
-      scans = ns.count(_.isInstanceOf[FileSourceScanExec]),
-      codegen = ns.count(_.isInstanceOf[WholeStageCodegenExec]),
-      windows = ns.count(_.isInstanceOf[WindowExec]),
-      globalWindows = ns.count {
-        case w: WindowExec => w.partitionSpec.isEmpty
-        case _ => false
-      },
-      cartesians = ns.count(_.isInstanceOf[CartesianProductExec]),
-      nestedLoops = ns.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
-  }
-
-  private def release(spark: SparkSession): Unit = {
-    graft.operators.Persisted.releaseAll(spark)
-    graft.plans.RollupRewrite.clear(spark)
-    spark.catalog.clearCache()
-  }
-
   /** warm + `passes` timed noop-sink executions; returns (min, shape). */
   private def time(spark: SparkSession, name: String, dir: String,
                    passes: Int): (Double, PlanShape) = {
     val fn = SparkEntry.queries(name)
-    def pass(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      release(spark)
-      dt
-    }
+    def pass(): Double = Harness.timedPass(spark)(fn(spark, dir))
     // untimed: under AQE the shape walk runs the query's stages, because
     // the final plan exists only once they have materialized
-    val sh = shape(fn(spark, dir).queryExecution.executedPlan)
-    release(spark)
+    val sh = Harness.shape(fn(spark, dir).queryExecution.executedPlan)
+    Harness.release(spark)
     pass() // warm (JIT, codegen cache, parquet footers)
     val best = Seq.fill(passes)(pass()).min
     (best, sh)
@@ -180,15 +124,7 @@ object ScaleProbe {
     val baseDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val probeDir = if (args.length > 2) args(2) else "target/sf1probe"
     val out = if (args.length > 3) args(3) else "BENCH_SF1_PROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores)
 
     if (mode == "gen") {
       generate(spark, baseDir, probeDir)
@@ -213,7 +149,7 @@ object ScaleProbe {
           s""""plan_sf01":${shBase.json},"plan_x10":${shProbe.json}}"""
       } catch {
         case e: Throwable =>
-          release(spark)
+          Harness.release(spark)
           flags += s"$name: ERROR ${e.getClass.getSimpleName}"
           s"""{"error":"${e.getClass.getSimpleName}: ${
             Option(e.getMessage).getOrElse("").take(120)

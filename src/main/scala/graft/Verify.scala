@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,13 @@ object Verify {
     // optional 3rd+ args: only dump these queries (local iteration aid)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_AQE=false gives the determinism sweep a second axis
     // beyond parallelism: AQE re-plans exchanges at runtime (coalesced
     // partitions, demoted broadcasts), which moves partial-aggregation
     // trees — gated VALUES must not move with them
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores,
+      "spark.sql.adaptive.enabled" -> aqe)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -33,13 +24,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries persistTracked() intermediates; the ledger releases
-      // exactly what this query registered so cache doesn't accumulate
-      // across the whole inventory run (clearCache as backstop for any
-      // untracked cache)
-      graft.operators.Persisted.releaseAll(spark)
-      graft.plans.RollupRewrite.clear(spark)
-      spark.catalog.clearCache()
+      // so cache doesn't accumulate across the whole inventory run
+      Harness.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -46,9 +46,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    with the ledger, the weak key only collects once the entry is
   *    DRAINED — a registered Rollup.mv plan can reference its session, a
   *    value→key strong reference that pins a non-empty entry — so the
-  *    lifecycle guarantee comes from the runner contract: Bench/Verify
-  *    call [[clear]] after every query, exactly like `Persisted
-  *    .releaseAll`, never from GC.
+  *    lifecycle guarantee comes from the runner contract: every runner
+  *    calls [[clear]] after every query (`graft.Harness.release`), exactly
+  *    like `Persisted.releaseAll`, never from GC.
   *
   * SUM children are matched by their canonical SQL text (backticks
   * stripped): registration declares e.g. `"CAST(l_quantity AS BIGINT)" ->
@@ -108,6 +108,10 @@ object RollupRewrite extends Rule[LogicalPlan] {
     * re-register after a rollup refresh instead). */
   def clear(spark: SparkSession): Unit =
     synchronized { registry.remove(spark); () }
+
+  /** Rollups registered for `spark` (a spec asserts a release empties it). */
+  def registered(spark: SparkSession): Int =
+    synchronized { registry.get(spark).map(_.size).getOrElse(0) }
 
   private def sessionRollups: Seq[Rollup] = synchronized {
     SparkSession.getActiveSession.toSeq

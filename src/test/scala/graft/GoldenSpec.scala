@@ -7,16 +7,15 @@ import org.apache.spark.sql.types._
   * (/root/reference/test/data, read-only): the integration-test golden from
   * tests/sql.rs, the smoketest console contract, NDJSON and DDL forms.
   */
-class GoldenSpec extends AnyFunSuite with SparkSpec {
+class GoldenSpec extends AnyFunSuite with SparkSpec with ReferenceData {
 
-  private val refData = "/root/reference/test/data"
   private lazy val ctx = new Context(spark)
 
   private val citySchema = StructType(Seq(
     StructField("city", StringType), StructField("lat", DoubleType),
     StructField("lng", DoubleType)))
 
-  test("csv_query_with_predicate golden (tests/sql.rs:30-37)") {
+  refTest("csv_query_with_predicate golden (tests/sql.rs:30-37)") {
     // header=true replicates the reference's hard-coded has_header that
     // consumes headerless row 1 (Elgin) — SURVEY §7.4-4
     ctx.registerCsv("cities", s"$refData/uk_cities.csv", citySchema, header = true)
@@ -27,7 +26,7 @@ class GoldenSpec extends AnyFunSuite with SparkSpec {
     assert(Render.tsv(df) == expected)
   }
 
-  test("smoketest: DDL + chained geospatial UDFs reproduce expected output") {
+  refTest("smoketest: DDL + chained geospatial UDFs reproduce expected output") {
     val script = scala.io.Source.fromFile(s"$refData/smoketest.sql").mkString
       .replace("'/test/data/", s"'$refData/")
     val out = new java.io.ByteArrayOutputStream()
@@ -44,7 +43,7 @@ class GoldenSpec extends AnyFunSuite with SparkSpec {
     assert(norm(got) == norm(expected))
   }
 
-  test("NDJSON scan with declared schema (example1.ndjson)") {
+  refTest("NDJSON scan with declared schema (example1.ndjson)") {
     val schema = StructType(Seq(StructField("a", LongType),
       StructField("b", StringType), StructField("c", DoubleType)))
     ctx.registerNdjson("nd", s"$refData/example1.ndjson", schema)
@@ -54,20 +53,20 @@ class GoldenSpec extends AnyFunSuite with SparkSpec {
       && rows(0).getDouble(2) == 12.34)
   }
 
-  test("DDL: CSV WITH HEADER ROW") {
+  refTest("DDL: CSV WITH HEADER ROW") {
     ctx.sql(s"CREATE EXTERNAL TABLE people (id INT, first_name VARCHAR(100)) " +
       s"STORED AS CSV WITH HEADER ROW LOCATION '$refData/people.csv'")
     val rows = ctx.sql("SELECT id, first_name FROM people ORDER BY id").collect()
     assert(rows.map(_.getString(1)).startsWith(Seq("Andy", "Brian", "Chris")))
   }
 
-  test("DDL: PARQUET without column list (self-describing)") {
+  refTest("DDL: PARQUET without column list (self-describing)") {
     ctx.sql("CREATE EXTERNAL TABLE atp STORED AS PARQUET " +
       s"LOCATION '$refData/alltypes_plain.parquet'")
     assert(ctx.sql("SELECT count(*) AS n FROM atp").collect().head.getLong(0) > 0)
   }
 
-  test("DDL: NDJSON with schema") {
+  refTest("DDL: NDJSON with schema") {
     ctx.sql("CREATE EXTERNAL TABLE nd2 (a BIGINT, b VARCHAR(10), c DOUBLE) " +
       s"STORED AS NDJSON LOCATION '$refData/example1.ndjson'")
     assert(ctx.sql("SELECT count(*) AS n FROM nd2").collect().head.getLong(0) == 3)

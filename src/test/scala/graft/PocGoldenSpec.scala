@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   *    (numerics_plus col5 "5.1400003" vs col6 "5.640000104904175");
   *  - floats print Rust-Display style: integral values without ".0".
   */
-class PocGoldenSpec extends AnyFunSuite with SparkSpec {
+class PocGoldenSpec extends AnyFunSuite with SparkSpec with ReferenceData {
 
-  private val refData = "/root/reference/test/data"
   private def golden(name: String): String = {
     // lossy UTF-8 decode: a few random c_str payloads are not valid UTF-8;
     // Spark's reader substitutes U+FFFD the same way
@@ -71,7 +70,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     ("multiply", _ * _, false), ("divide", _ / _, true), ("modulo", _ % _, false))
 
   for ((name, op, intDiv) <- ops; (suffix, ft) <- Seq(("", FloatType), ("_f64", DoubleType))) {
-    test(s"golden numerics_$name$suffix") {
+    refTest(s"golden numerics_$name$suffix") {
       assert(Render.csv(opCols(op, intDiv)(ft)) == golden(s"numerics_$name$suffix.csv"))
     }
   }
@@ -85,25 +84,25 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     spark.read.schema(schema).option("header", "true").csv(s"$refData/null_test.csv")
   }
 
-  test("golden is_null_csv") {
+  refTest("golden is_null_csv") {
     assert(Render.csv(nullTest.filter(col("c_float").isNull).select(col("c_int")))
       == golden("is_null_csv.csv"))
   }
 
-  test("golden is_not_null_csv") {
+  refTest("golden is_not_null_csv") {
     assert(Render.csv(nullTest.filter(col("c_float").isNotNull).select(col("c_int")))
       == golden("is_not_null_csv.csv"))
   }
 
   // ---- sqrt + limit over a 1..10 range ----
 
-  test("golden test_sqrt") {
+  refTest("golden test_sqrt") {
     val df = spark.range(1, 11).select(col("id").cast(IntegerType).as("n"),
       sqrt(col("id")).as("s"))
     assert(Render.csv(df) == golden("test_sqrt.csv"))
   }
 
-  test("golden test_limit") {
+  refTest("golden test_limit") {
     val df = spark.range(1, 11).select(col("id").cast(IntegerType).as("n"),
       sqrt(col("id")).as("s")).limit(5)
     assert(Render.csv(df) == golden("test_limit.csv"))
@@ -118,13 +117,13 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     spark.read.schema(schema).option("header", "false").csv(s"$refData/uk_cities.csv")
   }
 
-  test("golden test_filter (lat > 52, file order)") {
+  refTest("golden test_filter (lat > 52, file order)") {
     // coalesce(1) keeps the single-file input order through the filter
     assert(Render.csv(cities.coalesce(1).filter(col("lat") > 52))
       == golden("test_filter.csv"))
   }
 
-  test("golden test_sql_min_max") {
+  refTest("golden test_sql_min_max") {
     val df = cities.agg(min(col("lat")), max(col("lat")), min(col("lng")), max(col("lng")))
     assert(Render.csv(df) == golden("test_sql_min_max.csv"))
   }
@@ -174,13 +173,13 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     "c_int8_col_gteq" -> (col("c_int8") >= col("c_int16")))
 
   for ((name, pred) <- int8Filters) {
-    test(s"golden $name") {
+    refTest(s"golden $name") {
       assert(Render.csv(allTypes.filter(pred).select(col("c_int8"))) == golden(s"$name.csv"))
     }
   }
 
   for (c <- Seq("c_int16", "c_int32", "c_int64")) {
-    test(s"golden ${c}_positive / ${c}_negative") {
+    refTest(s"golden ${c}_positive / ${c}_negative") {
       assert(Render.csv(allTypes.filter(col(c) >= 0).select(col(c)))
         == golden(s"${c}_positive.csv"))
       assert(Render.csv(allTypes.filter(col(c) < 0).select(col(c)))
@@ -189,7 +188,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
   }
 
   for (c <- Seq("c_float32", "c_float64")) {
-    test(s"golden ${c}_low / ${c}_high") {
+    refTest(s"golden ${c}_low / ${c}_high") {
       assert(Render.csv(allTypes.filter(col(c) < 0.5).select(col(c)))
         == golden(s"${c}_low.csv"))
       assert(Render.csv(allTypes.filter(col(c) >= 0.5).select(col(c)))
@@ -203,13 +202,13 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
   for ((c, filtered) <- Seq("c_int8" -> true, "c_int16" -> true, "c_int32" -> true,
       "c_int64" -> true, "c_uint8" -> false, "c_uint16" -> false,
       "c_uint32" -> false, "c_uint64" -> false)) {
-    test(s"golden ${c}_cast") {
+    refTest(s"golden ${c}_cast") {
       val base = if (filtered) allTypes.filter(col(c) < 0) else allTypes
       assert(Render.csv(base.select(col(c).cast(LongType))) == golden(s"${c}_cast.csv"))
     }
   }
 
-  test("golden csv_aggregate_by_c_bool (min/max of every column per group)") {
+  refTest("golden csv_aggregate_by_c_bool (min/max of every column per group)") {
     val valueCols = allTypes.columns.filterNot(_ == "c_bool")
     val aggs = valueCols.flatMap(c => Seq(min(col(c)), max(col(c))))
     val df = allTypes.groupBy(col("c_bool")).agg(aggs.head, aggs.tail: _*)
@@ -221,14 +220,14 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
   // *_uint32 trio all contain the full unfiltered column — the POC's
   // uint32-cast predicates never filtered anything because every c_float32
   // value lies in (0,1), so CAST(c_float32 AS UINT32) is always 0
-  test("golden c_float32_cast / c_float64_cast") {
+  refTest("golden c_float32_cast / c_float64_cast") {
     assert(Render.csv(allTypes.filter(col("c_float32") < 0.5)
       .select(col("c_float32").cast(FloatType))) == golden("c_float32_cast.csv"))
     assert(Render.csv(allTypes.filter(col("c_float64") < 0.5)
       .select(col("c_float64"))) == golden("c_float64_cast.csv"))
   }
 
-  test("golden c_float32 uint32-cast trio (always-true predicates)") {
+  refTest("golden c_float32 uint32-cast trio (always-true predicates)") {
     val all = Render.csv(allTypes.filter(col("c_float32").cast(IntegerType) >= 0)
       .select(col("c_float32")))
     assert(all == golden("c_float32_cast_uint32.csv"))
@@ -236,7 +235,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     assert(all == golden("c_float32_high_uint32.csv"))
   }
 
-  test("golden csv_query_all_types / parquet_query_all_types (c_float64 < 0.1)") {
+  refTest("golden csv_query_all_types / parquet_query_all_types (c_float64 < 0.1)") {
     // predicate recovered by threshold search over the selected set:
     // max(selected)=0.0977… < 0.1 ≤ min(unselected)=0.1078…
     assert(Render.csv(allTypes.filter(col("c_float64") < 0.1))
@@ -246,7 +245,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
       == golden("parquet_query_all_types.csv"))
   }
 
-  test("golden csv_aggregate_all_types (count + min/max matrix)") {
+  refTest("golden csv_aggregate_all_types (count + min/max matrix)") {
     // the golden's two trailing string cells are IDENTICAL — the POC emitted
     // min(c_str) twice (max slot included); replicated as-is
     val valueCols = allTypes.columns.filterNot(_ == "c_str")
@@ -259,7 +258,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
 
   // ---- geospatial UDF/UDT goldens over uk_cities ----
 
-  test("golden test_simple_predicate (ST chain, header-consumed, lat < 53)") {
+  refTest("golden test_simple_predicate (ST chain, header-consumed, lat < 53)") {
     val withHeader = spark.read.schema(cities.schema).option("header", "true")
       .csv(s"$refData/uk_cities.csv").coalesce(1)
     val df = withHeader.filter(col("lat") < 53)
@@ -268,13 +267,13 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     assert(Render.csv(df) == golden("test_simple_predicate.csv"))
   }
 
-  test("golden test_chaining_functions (full headerless read)") {
+  refTest("golden test_chaining_functions (full headerless read)") {
     val df = cities.coalesce(1).select(graft.functions.Geo.stAsText(
       graft.functions.Geo.stPoint(col("lat"), col("lng"))))
     assert(Render.csv(df) == golden("test_chaining_functions.csv"))
   }
 
-  test("golden test_sql_udf_udt / test_df_udf_udt (struct Display render)") {
+  refTest("golden test_sql_udf_udt / test_df_udf_udt (struct Display render)") {
     val df = cities.coalesce(1)
       .select(graft.functions.Geo.stPoint(col("lat"), col("lng")))
     val out = Render.csv(df)
@@ -282,7 +281,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     assert(out == golden("test_df_udf_udt.csv"))
   }
 
-  test("SQL UDF implicit arg cast: ST_Point(int, int) matches the double path") {
+  refTest("SQL UDF implicit arg cast: ST_Point(int, int) matches the double path") {
     // the reference planner inserts CASTs to a UDF's declared arg types
     // (/root/reference/src/sqlplanner.rs:350-354); Spark's analyzer does the
     // same for registered UDFs — prove integer inputs flow through the
@@ -300,7 +299,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
     assert(viaSql.head.matches("""POINT \(-?\d+\.0 -?\d+\.0\)"""))
   }
 
-  test("golden parquet_aggregate_all_types (sequential SATURATING sums)") {
+  refTest("golden parquet_aggregate_all_types (sequential SATURATING sums)") {
     // the POC's sum kernel is a sequential saturating fold — path-dependent
     // once an intermediate saturates (i32 pins at MAX; i64 saturates then
     // drifts back down to 269433464379590488). Replicated as an ordered fold
@@ -326,7 +325,7 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec {
       == golden("parquet_aggregate_all_types.csv"))
   }
 
-  test("golden test_cast (null_test cast matrix, non-null rows)") {
+  refTest("golden test_cast (null_test cast matrix, non-null rows)") {
     val df = nullTest.filter(col("c_int") <= 2).select(
       col("c_int").cast(ByteType), col("c_int").cast(ShortType),
       col("c_int").cast(IntegerType), col("c_int").cast(LongType),

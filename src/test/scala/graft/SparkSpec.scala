@@ -13,14 +13,7 @@ trait SparkSpec extends BeforeAndAfterAll { this: Suite =>
     graft.operators.Persisted.releaseAll(spark)
     super.afterAll()
   }
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   /** Smallest scale factor: fast, still exercises every operator. */
   val sf = "/root/testdata/sf0.001"
