@@ -75,7 +75,7 @@ object Harness {
     * query stage's exchange. A reused exchange stays a leaf: it ran once,
     * where it was first planned. Without AQE this is exactly `collect`.
     */
-  private def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
+  private[graft] def nodes(plan: SparkPlan): Seq[SparkPlan] = plan match {
     case a: AdaptiveSparkPlanExec => nodes(a.finalPhysicalPlan)
     case q: QueryStageExec => nodes(q.plan)
     case p => p +: p.children.flatMap(nodes)

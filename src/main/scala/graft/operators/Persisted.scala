@@ -5,12 +5,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** Scoped persist lifecycle for query bodies — the single owner of every
   * cache a query creates.
   *
-  * A query body persists an intermediate because its RESULT plan reads it
-  * more than once (an LSH pair chain probed by three configs, an edge set
-  * walked by an iterative CC loop). The result is returned LAZILY, so the
-  * body itself can never unpersist: the cache must outlive plan
-  * construction, until whatever action the CALLER runs has materialized the
-  * plan. The lifecycle therefore has two halves with two owners:
+  * A query body persists an intermediate only when its RESULT plan reads it
+  * through more than one exchange (a self-join of one aggregate shares the
+  * aggregate's shuffle through AQE's exchange reuse) and recomputing costs
+  * more than the cache: an LSH pair chain probed by three configs, an edge
+  * set walked by a CC loop. Never persist a cheap projection of a scan. The
+  * result is returned LAZILY, so the body itself can never unpersist: the
+  * cache must outlive plan construction, until whatever action the CALLER
+  * runs has materialized the plan. The lifecycle therefore has two halves
+  * with two owners:
   *
   *  - the BODY registers: [[TrackedPersist.persistTracked]] persists the
   *    frame and records it in a ledger keyed by the frame's OWN
@@ -18,7 +21,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    replaces);
   *  - the RUNNER releases: [[releaseAll]] unpersists exactly the frames its
   *    session registered — `Verify.main` after each per-query parquet dump,
-  *    `Bench.timedPass` after every timed pass, `SparkSpec` between suites.
+  *    `Harness.timedPass` after every timed pass, `SparkSpec` between suites.
   *    (`spark.catalog.clearCache()` would also evict them, but it nukes
   *    every cached relation in the session — including test fixtures and
   *    cross-query static tables — so the ledger releases only what query

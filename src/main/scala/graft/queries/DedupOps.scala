@@ -15,16 +15,12 @@ import graft.functions.{Text, Vectors}
   * on a skewed dataset. At 100 TB the bucket keys are the shuffle partitioning
   * keys; nothing here ever compares all pairs.
   *
-  * Persist lifecycle: query builders here `persist()` frames reused across
-  * branches of the SAME query plan (pair sets, meta joins) and do NOT
-  * unpersist them — the cache must outlive the caller's single
-  * materializing action, which no code inside a lazy plan builder can
-  * observe. The harness owns the boundary: Verify and Bench call
-  * `spark.catalog.clearCache()` after each query's action, so these
-  * caches are query-scoped, never session-accumulating. Iterative
-  * algorithms ([[connectedComponents]]) DO unpersist eagerly — their
-  * superseded iterations die inside the builder where the fixpoint loop
-  * has already materialized the next state.
+  * Persist lifecycle: builders `persistTracked()` a frame only under
+  * [[graft.operators.Persisted]]'s rule (its reads cannot share one
+  * exchange and recomputing it costs more than the cache) and never
+  * unpersist it; `Harness.release` drops it after the caller's action.
+  * Iterative algorithms ([[connectedComponents]]) unpersist superseded
+  * iterations eagerly, once the fixpoint loop has materialized the next.
   */
 object DedupOps {
   type Q = (SparkSession, String) => DataFrame
@@ -1190,8 +1186,8 @@ object DedupOps {
       // the rollup stage IS the streaming function (DocsStream.
       // minhashRollup), so batch and live signatures can never drift;
       // StreamingSpec pins micro-batched == batch bit-equality on top
+      // srcSig and sh are not persisted: AQE reuses each self-join's shuffle
       val srcSig = graft.streaming.DocsStream.minhashRollup(docs(s, d))
-        .persistTracked()
       val est = srcSig.select(col("source").as("src_a"), col("pos"),
           col("mv").as("va"))
         .join(srcSig.select(col("source").as("src_b"), col("pos"),
@@ -1203,7 +1199,7 @@ object DedupOps {
       val sh = docs(s, d).select(col("source"),
           explode(graft.functions.TextExprs.shingleHashes(col("text"), 3))
             .as("h"))
-        .distinct().persistTracked()
+        .distinct()
       val sz = sh.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val inter = sh.select(col("source").as("src_a"), col("h"))
         .join(sh.select(col("source").as("src_b"), col("h")), "h")

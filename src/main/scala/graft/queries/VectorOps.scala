@@ -25,9 +25,9 @@ object VectorOps {
 
   private def emb(s: SparkSession, d: String) = Tables(s, d, "embeddings")
 
-  /** (vec_id, vd): the embeddings as double[64], persisted via the ledger. */
+  /** (vec_id, vd): the embeddings as double[64]; re-scanned, never cached. */
   private def embD(s: SparkSession, d: String): DataFrame = emb(s, d).select(col("vec_id"),
-    transform(col("embedding"), x => x.cast("double")).as("vd")).persistTracked()
+    transform(col("embedding"), x => x.cast("double")).as("vd"))
 
   val queries: Map[String, Q] = Map(
     // ---- per-vector stats (the oracle anchor for the vector column) ----
@@ -757,7 +757,7 @@ object VectorOps {
     * if a degenerate codebook dropped a memberless centroid (the DuckDB
     * oracle joins on (m, cid) and would diverge); keyed entries stay
     * correct for any surviving cid set. `e` must be (vec_id, vd) with vd
-    * double[64], persisted by the caller.
+    * double[64]; its reads re-scan the source.
     */
   private def adcDistances(e: DataFrame): DataFrame = {
     val (assignments, codebooks) = pqAssignmentsFrom(e)
@@ -904,8 +904,8 @@ object VectorOps {
     * deterministic init (first 16 vectors), ONE Lloyd round with centroids
     * rounded to 6dp (both engines agree bit-for-bit), corpus
     * reassignment, and the probe-side centroid ranking kept to
-    * `maxProbe`. Returns (e, cents1, a2, probed-with-crn); e and a2's
-    * spine are persisted via the ledger. */
+    * `maxProbe`. Returns (e, cents1, a2, probed-with-crn); nothing is
+    * persisted, so every read of e re-scans the embeddings. */
   private def ivfIndex(s: SparkSession, d: String, maxProbe: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import graft.functions.VectorExprs

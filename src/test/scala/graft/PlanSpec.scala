@@ -1095,4 +1095,52 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(scans.size == 1,
       s"rollup-only plan should scan lineitem once, saw ${scans.size}")
   }
+
+  test("text_vector keys persist nothing that exchange reuse or a re-scan replaces") {
+    // q_minhash_rollup's two aggregates are each read by one self-join, so
+    // AQE's reused exchange shares their shuffles; the embeddings cast is
+    // a projection of a columnar scan, cheaper to re-scan than to cache.
+    // q_ivf_tuning keeps its two call-site persists (exact truth and
+    // candidates), whose reads go through different exchanges.
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = Harness.nodes(p).flatMap {
+      case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan)
+      case n => Seq(n)
+    }
+    def projectionOfScan(p: SparkPlan): Boolean = p match {
+      case _: FileSourceScanExec => true
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec |
+           _: ProjectExec | _: FilterExec => p.children.forall(projectionOfScan)
+      case _ => false
+    }
+    val callSitePersists = Map("q_ivf_tuning" -> 2).withDefaultValue(0)
+    Seq("q_minhash_rollup", "q_embed_pq", "q_ann_pq", "q_ann_pq_rerank",
+        "q_pq_append", "q_ann_ivf", "q_ivf_tuning").foreach { name =>
+      Harness.release(spark)
+      try {
+        val df = q(name)
+        assert(graft.operators.Persisted.pending(spark) == callSitePersists(name),
+          s"$name persisted ${graft.operators.Persisted.pending(spark)} frames")
+        df.collect()
+        val ns = walk(df.queryExecution.executedPlan)
+        val cached = ns.collect { case m: InMemoryTableScanExec => m }
+        if (callSitePersists(name) == 0)
+          assert(cached.isEmpty, s"$name reads ${cached.size} cached frames")
+        assert(!cached.exists(m => projectionOfScan(m.relation.cachedPlan)),
+          s"$name caches a projection of a scan")
+        if (name == "q_minhash_rollup") {
+          val docScans = ns.count {
+            case f: FileSourceScanExec =>
+              f.metadata.get("Location").exists(_.contains("documents"))
+            case _ => false
+          }
+          assert(docScans == 2, s"q_minhash_rollup scans documents $docScans times")
+          assert(ns.exists(_.isInstanceOf[ReusedExchangeExec]),
+            "q_minhash_rollup's self-joins no longer reuse an exchange")
+        }
+      } finally Harness.release(spark)
+    }
+  }
 }
