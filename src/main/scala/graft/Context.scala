@@ -5,13 +5,13 @@ import org.apache.spark.sql.types.StructType
 
 /** `ExecutionContext` analog (reference: /root/reference/src/execution/
   * context.rs) — a thin facade over a SparkSession: table registration with
-  * declared schemas, SQL entry point routing our DDL dialect, and UDF
-  * registration. One reference line ↦ one Spark call; parsing, planning,
-  * optimization and execution are all Catalyst's.
+  * declared schemas, SQL entry point routing our DDL dialect, and the
+  * engine's planner extensions ([[Context.install]]). One reference line ↦
+  * one Spark call; parsing, planning, optimization and execution are all
+  * Catalyst's.
   */
 class Context(val spark: SparkSession) {
-  graft.functions.Geo.register(spark)
-  graft.functions.TextExprs.register(spark)
+  Context.install(spark)
 
   /** register_datasource(CSV): declared schema, never inferred
     * (datasource.rs:39-43). `header=true` mirrors the reference's hard-coded
@@ -60,6 +60,45 @@ class Context(val spark: SparkSession) {
 }
 
 object Context {
+  /** Install every planner extension and SQL function the engine needs on
+    * `spark`, once: the TopKPerKey strategy and window-top-k rewrite, the
+    * rollup navigation rule (a no-op while no rollup is registered), and
+    * the console's SQL functions. The reference builds its whole planner
+    * in `ExecutionContext::new`; the runtime-injection twin here is
+    * `spark.experimental`, because callers of `SparkEntry` (perfbench
+    * among them) build their own sessions. So the install runs from the
+    * three places a session reaches the engine: `Harness.session`, this
+    * class's constructor and every `SparkEntry` query function.
+    * Idempotent: a session plans every query with the same planner,
+    * whatever ran on it before.
+    */
+  def install(spark: SparkSession): Unit = synchronized {
+    import graft.functions.{MinHashSig, RollingHash, SimHashBits, WinnowHashes}
+    import graft.plans.{RollupRewrite, TopKRewrite, TopKStrategy}
+    val ext = spark.experimental
+    if (!ext.extraStrategies.contains(TopKStrategy)) {
+      ext.extraStrategies = ext.extraStrategies :+ TopKStrategy
+      ext.extraOptimizations =
+        ext.extraOptimizations :+ TopKRewrite :+ RollupRewrite
+      // ST_Point(x, y) → struct<x,y>, ST_AsText(point) → WKT; a
+      // reference-typed UDF arg receives null AS null (primitive args are
+      // null-checked around the call), so ST_AsText propagates it
+      spark.udf.register("ST_Point", (x: Double, y: Double) => (x, y))
+      spark.udf.register("ST_AsText", (pt: org.apache.spark.sql.Row) =>
+        if (pt == null) null
+        else s"POINT (${pt.getDouble(0)} ${pt.getDouble(1)})")
+      val fns = spark.sessionState.functionRegistry
+      fns.createOrReplaceTempFunction(
+        "minhash_sig", exprs => MinHashSig(exprs.head, 64), "scala_udf")
+      fns.createOrReplaceTempFunction(
+        "simhash62", exprs => SimHashBits(exprs.head, 62), "scala_udf")
+      fns.createOrReplaceTempFunction(
+        "rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
+      fns.createOrReplaceTempFunction(
+        "winnow_hashes", exprs => WinnowHashes(exprs.head, 3, 4), "scala_udf")
+    }
+  }
+
   /** Standalone session with the project's standard config. */
   def local(cores: Int = Harness.cores): Context =
     new Context(Harness.session(cores))

@@ -19,8 +19,9 @@ object Harness {
 
   /** The one place a session is built: `local[cores]`, shuffle partitions =
     * cores, UTC session time, `nanosAsLong` (events.parquet carries
-    * TIMESTAMP(NANOS)), UI off, WARN logging. `extraConf` is applied last,
-    * so it can override a standard conf.
+    * TIMESTAMP(NANOS)), UI off, WARN logging, and the engine's planner
+    * extensions (`Context.install`). `extraConf` is applied last, so it
+    * can override a standard conf.
     */
   def session(cores: Int, extraConf: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()
@@ -33,6 +34,7 @@ object Harness {
     extraConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Context.install(spark)
     spark
   }
 

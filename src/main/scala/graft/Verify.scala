@@ -5,9 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd+ args: only dump these queries (local iteration aid)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args.drop(2).toSet) else None
+    // optional 3rd+ args: only dump these queries, in the order given (the
+    // determinism sweep's order axis); default: every query, map order
+    val all = SparkEntry.queries
+    val todo = if (args.length > 2) args.drop(2).toSeq.map(n => n -> all(n))
+      else all.toSeq
     // SPARK_GRAFT_AQE=false gives the determinism sweep a second axis
     // beyond parallelism: AQE re-plans exchanges at runtime (coalesced
     // partitions, demoted broadcasts), which moves partial-aggregation
@@ -16,9 +18,7 @@ object Verify {
     val spark = Harness.session(Harness.cores,
       "spark.sql.adaptive.enabled" -> aqe)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    todo.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

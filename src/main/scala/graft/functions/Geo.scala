@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
   * Spark-native equivalent is a plain `struct<x:double,y:double>` column —
   * codegen'd `named_struct` + field access, no UDF and no custom Expression
   * needed. Function chaining (`ST_AsText(ST_Point(x, y))`) composes for free.
+  * The SQL-callable versions are registered by `graft.Context.install`.
   */
 object Geo {
   /** ST_Point(x, y) → struct<x,y>. */
@@ -21,17 +22,4 @@ object Geo {
   def stAsText(pt: Column): Column =
     concat(lit("POINT ("), pt.getField("x").cast("string"), lit(" "),
       pt.getField("y").cast("string"), lit(")"))
-
-  /** Register SQL-callable versions so `spark.sql("SELECT ST_AsText(ST_Point(…))")`
-    * works like the reference console.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.udf.register("ST_Point", (x: Double, y: Double) => (x, y))
-    // reference-typed UDF args receive null AS null (unlike primitive args,
-    // which Spark null-checks around the call) — propagate it instead of
-    // NPE-ing on the field access
-    spark.udf.register("ST_AsText", (pt: org.apache.spark.sql.Row) =>
-      if (pt == null) null
-      else s"POINT (${pt.getDouble(0)} ${pt.getDouble(1)})")
-  }
 }

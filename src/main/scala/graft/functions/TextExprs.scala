@@ -672,18 +672,6 @@ object TextExprs {
   def greedyMergeApply(text: Column, xs: Column, ys: Column): Column =
     column(GreedyMergeApply(expression(text), expression(xs), expression(ys)))
 
-  /** SQL names, so the console can call them too. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head, 64), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash62", exprs => SimHashBits(exprs.head, 62), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_hashes", exprs => WinnowHashes(exprs.head, 3, 4), "scala_udf")
-  }
-
   // ---------- DuckDB oracle SQL generators (identical arithmetic) ----------
   // Every generator returns an expression string over a column reference;
   // all integer intermediates stay below 2^62, so DuckDB BIGINT never

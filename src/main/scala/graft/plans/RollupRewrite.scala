@@ -81,9 +81,11 @@ object RollupRewrite extends Rule[LogicalPlan] {
     new mutable.WeakHashMap[SparkSession, mutable.ArrayBuffer[Rollup]]
 
   /** Register a rollup for `factPath` (suffix-matched against the scan's
-    * root path) and idempotently inject this rule into the session's
-    * optimizer. The rollup DataFrame should already be persisted +
-    * materialized if navigation is to read memory rather than re-derive.
+    * root path). Registration is data only: the rule itself is installed
+    * on every session by `graft.Context.install` and does nothing while
+    * the session's registry is empty. The rollup DataFrame should already
+    * be persisted + materialized if navigation is to read memory rather
+    * than re-derive.
     */
   def register(spark: SparkSession, factPath: String, keys: Set[String],
       sums: Map[String, String], countCol: String, mv: DataFrame,
@@ -99,9 +101,6 @@ object RollupRewrite extends Rule[LogicalPlan] {
       r.mins == mins && r.maxs == maxs && r.counts == counts))
     buf += Rollup(factPath, keys, sums, countCol, mins, maxs, counts,
       mv.queryExecution.optimizedPlan)
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 
   /** Drop this session's rollups (specs; a production session would

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import scala.collection.mutable
 
@@ -218,13 +218,13 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
   * breaks order ties ARBITRARILY, so when `orderSpec` is not a total
   * order the window plan and the heap plan may keep different (equally
   * valid) rows; what IS invariant under ties is the multiset of order-
-  * column values selected per key. Queries here follow the repo-wide
-  * total-order convention (orderSpec ends in a unique tie-break column —
-  * anything else could not pass a cross-engine oracle either), and the
-  * AnalyticsSpec ties fixture pins the invariant down. Sessions that
-  * cannot guarantee the convention should disable the rewrite with
-  * `spark.graft.topk.autoRewrite=false` (checked per-query below, so the
-  * gate works even after session-wide registration).
+  * column values selected per key. Either choice is a valid row_number
+  * answer, so the rewrite is always on: `graft.Context.install` puts it
+  * on every session before its first query, and every session plans the
+  * same query the same way. Queries here follow the repo-wide total-order
+  * convention (orderSpec ends in a unique tie-break column — anything
+  * else could not pass a cross-engine oracle either), and the
+  * AnalyticsSpec ties fixture pins the invariant down.
   */
 object TopKRewrite extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, CurrentRow, LessThan, LessThanOrEqual, Literal, NamedExpression, RowFrame, RowNumber, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
@@ -245,9 +245,7 @@ object TopKRewrite extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.topk.autoRewrite", "true").toBoolean) {
-      plan
-    } else plan.transformDown {
+    plan.transformDown {
       case p @ Project(projList, Filter(cond, w: LWindow)) =>
         val bound = cond match {
           case LessThanOrEqual(a: Attribute, Literal(k: Int, _)) => Some(a -> k)
@@ -277,46 +275,11 @@ object TopKStrategy extends SparkStrategy {
   }
 }
 
-/** User-facing construction + per-session strategy registration. */
+/** User-facing construction. The planner strategy (and the rewrite that
+  * reaches the same operator from a window) is installed on every session
+  * by `graft.Context.install`.
+  */
 object TopK {
-  /** Idempotently register the planner strategy on this session —
-    * `experimental.extraStrategies` is the runtime-injection twin of
-    * `SparkSessionExtensions.injectPlannerStrategy` (which only applies
-    * at session build time; the driver owns our sessions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-  }
-
-  /** Also inject the automatic window-top-k rewrite (Rule[LogicalPlan])
-    * — every later query on the session whose row_number ≤ k pattern
-    * drops the rank column gets the heap operator for free.
-    *
-    * Registration is SESSION-STICKY, so two properties make it safe to
-    * leave on (and both are enforced in code, not convention alone):
-    *
-    *  - memory: both exec passes are bounded — the partial heap map caps
-    *    at `spark.graft.topk.partialMaxKeys` keys and flushes on
-    *    overflow; the final pass streams sorted key groups holding one
-    *    k-heap (the sort it requires is Spark's spillable one). A
-    *    high-cardinality key can no longer OOM a task the way the
-    *    pre-round-8 unbounded map could.
-    *  - opt-out: the rewrite re-checks `spark.graft.topk.autoRewrite`
-    *    (default true) on every invocation, so a session can disable it
-    *    at any time — e.g. for queries whose window order is NOT a total
-    *    order, where row_number's arbitrary tie choice and the heap's may
-    *    keep different-but-equally-ranked rows (the order-column
-    *    multisets still agree; see TopKRewrite's tie-safety note).
-    */
-  def ensureRewriteRegistered(spark: SparkSession): Unit = synchronized {
-    ensureRegistered(spark)
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-  }
-
   /** Top `k` rows per distinct value of `keys`, best-first under `order`
     * — (column name, ascending?) pairs that must form a TOTAL order
     * (include a tie-break column) or the boundary rows are
@@ -334,7 +297,6 @@ object TopK {
     // already guards k >= 1 structurally)
     require(k >= 1, s"top-k requires k >= 1, got $k")
     val spark = df.sparkSession
-    ensureRegistered(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Expression = analyzed.output
       .find(_.name == n)

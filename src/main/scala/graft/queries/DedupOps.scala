@@ -63,9 +63,10 @@ object DedupOps {
     * output: a `row_number()` pre-filter keeps at most BucketCap rows per key
     * before any `collect_set`, so a degenerate hot bucket (e.g. millions of
     * identical docs sharing one band hash) can never accumulate an unbounded
-    * array on one reducer. The window partitioning equals the groupBy keys,
-    * so Catalyst reuses one hash shuffle for both — the cap costs a
-    * within-partition sort, not a second exchange. Result is identical to
+    * array on one reducer. The rank column is dropped, so TopKRewrite plans
+    * the cap as a TopKPerKey: a map-side partial heap per key, one hash
+    * exchange on the keys that the groupBy reuses, and a final heap pass
+    * over a key sort — no window, no second exchange. Result is identical to
     * `slice(array_sort(collect_set(id)), 1, BucketCap)`: both select the
     * BucketCap smallest ids (and cap ≥ 2 keeps the ≥2-member filter exact).
     */

@@ -285,14 +285,13 @@ object TemporalOps {
     //      WindowExec, no per-key sort. The oracle is the row_number
     //      formulation, proving the physical rewrite result-equal ----
     // ---- the AUTO path: written as the canonical row_number window —
-    //      the injected TopKRewrite Rule[LogicalPlan] recognizes that the
-    //      rank column is discarded and swaps in TopKPerKey at
-    //      optimization time (PlanSpec proves no WindowExec survives).
-    //      Registration is session-sticky: every later query with the
-    //      same safe pattern gets the heap operator too, and the full
-    //      oracle sweep gates that globally ----
+    //      the TopKRewrite Rule[LogicalPlan] recognizes that the rank
+    //      column is discarded and swaps in TopKPerKey at optimization
+    //      time (PlanSpec proves no WindowExec survives). Context.install
+    //      puts the rule on every session, so every query with the same
+    //      safe pattern gets the heap operator, whatever ran before it,
+    //      and the full oracle sweep gates that globally ----
     "q_topk_auto" -> ((s, d) => {
-      graft.plans.TopK.ensureRewriteRegistered(s)
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("value").desc, col("event_id").asc)
       events(s, d)

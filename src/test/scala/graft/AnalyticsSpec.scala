@@ -320,6 +320,23 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     assert(lambda >= seed - 1e-6, s"λ=$lambda < seed Rayleigh $seed")
   }
 
+  /** The row_number reference for TopKPerKey: the rows of `df` ranked
+    * within `w` up to `k`, with `rn` kept as the last column. TopKRewrite
+    * only rewrites a window whose rank column is dropped, so a reference
+    * without `rn` would be planned as the heap it is checked against; the
+    * plan check pins that it ran as a window. */
+  private def windowRef(df: org.apache.spark.sql.DataFrame,
+      w: org.apache.spark.sql.expressions.WindowSpec,
+      k: Int): Array[org.apache.spark.sql.Row] = {
+    val ref = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    val rows = ref.collect()
+    val ops = Harness.nodes(ref.queryExecution.executedPlan)
+    if (!ops.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]) ||
+        ops.exists(_.isInstanceOf[graft.plans.TopKPerKeyExec]))
+      fail(s"window reference was not planned as a window:\n${ref.queryExecution.executedPlan}")
+    rows
+  }
+
   test("TopKPerKey equals the window formulation on adversarial shapes") {
     import org.apache.spark.sql.expressions.{Window => W}
     val df = spark.range(0, 1000)
@@ -333,8 +350,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
       val nat = asSet(graft.plans.TopK.perKey(df, Seq("k"),
         Seq("v" -> false, "id" -> true), k).collect())
       val w = W.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
-      val win = asSet(df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k).drop("rn").collect())
+      val win = asSet(windowRef(df, w, k))
       assert(nat == win, s"k=$k: heap ${nat.size} rows vs window ${win.size}")
     }
     // empty input stays empty
@@ -365,8 +381,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
         Seq("v" -> false, "id" -> true), 3)
       val nat = asSet(natDf.collect())
       val w = W.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
-      val win = asSet(df.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3).drop("rn").collect())
+      val win = asSet(windowRef(df, w, 3))
       assert(nat == win, s"flush path diverged: ${nat.size} vs ${win.size} rows")
       // the numFlushes metric proves the overflow path actually ran (8-key
       // cap against 5000 distinct keys) — not just that results agree
@@ -395,8 +410,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     val nat = multiset(graft.plans.TopK.perKey(df, Seq("k"),
       Seq("v" -> false), 10).select(col("k"), col("v")).collect())
     val w = W.partitionBy(col("k")).orderBy(col("v").desc)
-    val win = multiset(df.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10).select(col("k"), col("v")).collect())
+    val win = multiset(windowRef(df, w, 10))
     assert(nat == win, s"order-value multisets diverged: $nat vs $win")
     // and concretely: top-10 of 50 v=1 rows per key is ten (k, 1) pairs
     assert(nat == (0L until 4L).map(k => (k, 1L) -> 10).toMap)

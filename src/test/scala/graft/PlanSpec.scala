@@ -899,20 +899,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("top-k auto-rewrite honors its config gate") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the rewrite re-checks spark.graft.topk.autoRewrite per query, so a
-    // session can opt out even after session-sticky registration (the
-    // tie-safety escape hatch)
-    withoutAQE(withConf("spark.graft.topk.autoRewrite", "false") {
-      val plan = q("q_topk_auto").queryExecution.executedPlan
-      assert(plan.collectFirst { case t: graft.plans.TopKPerKeyExec => t }.isEmpty,
-        "rewrite fired despite the gate")
-      assert(plan.collectFirst { case w: WindowExec => w }.nonEmpty,
-        "gated plan lost its window formulation")
-    })
-  }
-
   test("basket supports and fusion legs join as broadcasts") {
     Seq("q_copurchase_rules", "q_item_sim", "q_link_predict").foreach { n =>
       val bhj = physical(n).collect { case b: BroadcastHashJoinExec => b }

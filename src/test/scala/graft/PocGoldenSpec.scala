@@ -286,7 +286,6 @@ class PocGoldenSpec extends AnyFunSuite with SparkSpec with ReferenceData {
     // (/root/reference/src/sqlplanner.rs:350-354); Spark's analyzer does the
     // same for registered UDFs — prove integer inputs flow through the
     // ST_Point(double, double) registration unchanged
-    graft.functions.Geo.register(spark)
     val ints = cities.coalesce(1)
       .select(col("lat").cast("int").as("ilat"), col("lng").cast("int").as("ilng"))
     ints.createOrReplaceTempView("cities_int")
