@@ -79,13 +79,13 @@ object Skew {
     else "salted"
   }
 
-  /** The count-then-choose broadcast gate, extracted from the triangle
-    * closing-edge probe so every future maybe-corpus-sized build side gets
-    * the discipline by default instead of by review: broadcast `build`
-    * iff a MEASURED row count is within `maxRows`; otherwise pin an
-    * explicit shuffle_hash hint so the planner can never re-broadcast an
-    * over-threshold relation off a stale size estimate. Both branches are
-    * result-identical — only the exchange strategy moves.
+  /** The count-then-choose broadcast gate of the triangle closing-edge
+    * probe: broadcast `build` iff a MEASURED row count is within
+    * `maxRows`; otherwise pin an explicit shuffle_hash hint so the planner
+    * can never re-broadcast an over-threshold relation off a stale size
+    * estimate. Both branches are result-identical — only the exchange
+    * strategy moves. A site needs it only where AQE's default threshold
+    * would not broadcast a side measured to be safe; elsewhere AQE chooses.
     *
     * @param rows a count already paid by the caller (usually on a frame
     *             that is persisted anyway); passing it in keeps the gate

@@ -46,6 +46,20 @@ object BasketOps {
       .groupBy(col("a.p").as("pa"), col("b.p").as("pb"))
       .agg(count(lit(1)).as("n_ab"))
 
+  /** q_modularity's and q_conductance's persisted edge set (pa, pb) and
+    * its persisted brand pairs (ba, bb), brands attached by broadcast. */
+  private def brandEdges(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val e = coEdges(items(s, d)).select(col("pa"), col("pb")).persistTracked()
+    val brand = Tables(s, d, "part").select(col("p_partkey"), col("p_brand"))
+    val eb = e
+      .join(broadcast(brand.select(col("p_partkey").as("pa"),
+        col("p_brand").as("ba"))), "pa")
+      .join(broadcast(brand.select(col("p_partkey").as("pb"),
+        col("p_brand").as("bb"))), "pb")
+      .select(col("ba"), col("bb")).persistTracked()
+    (e, eb)
+  }
+
   val queries: Map[String, Q] = Map(
     // ---- association rules: for every co-purchased pair seen ≥2 times,
     //      both directed rules a→b with confidence n_ab/n_a and lift
@@ -53,32 +67,24 @@ object BasketOps {
     //      twice — broadcast BOUND: |supp| = |distinct parts| (catalog
     //      cardinality, ~200k/SF here, 3 small columns), not corpus
     //      cardinality, so it stays broadcastable through ~100× data; a
-    //      true billion-item catalog would flip these to plain shuffle
-    //      joins on the item key exactly like q_triangles' closing-edge
-    //      chooser. The order total is a 1-row broadcast. Ranking =
-    //      top-50 by lift — IEEE division of
-    //      exact integers, bit-identical across engines, so it is safe as
-    //      an ORDERING key (libm never would be) ----
+    //      true billion-item catalog outgrows AQE's broadcast threshold,
+    //      and AQE then shuffles on the item key from the measured size.
+    //      The order total is a 1-row broadcast. Ranking = top-50 by
+    //      lift — IEEE division of exact integers, bit-identical across
+    //      engines, so it is safe as an ORDERING key (libm never would
+    //      be) ----
     "q_copurchase_rules" -> ((s, d) => {
       // the incidence feeds both sides of the pair self-join plus the
       // support census — without persist each reference re-runs the
       // lineitem scan + distinct
       val it = items(s, d).persistTracked()
       val pairs = coEdges(it).filter(col("n_ab") >= 2)
-      // support census through the count-then-choose gate (the q_triangles
-      // device, hoisted to Skew.sizeGatedBroadcast): the "~200k/SF stays
-      // broadcastable" claim above is now MEASURED per run, and the
-      // billion-item-catalog flip to a shuffled item-key join happens by
-      // itself instead of by code review
+      // support census, joined plainly: AQE reads its measured size and
+      // broadcasts it while it fits, and shuffles on the item key when a
+      // bigger catalog does not (PLANS.md §7za). The persist lets both
+      // renamed reads share one aggregation
       val supp = it.groupBy(col("p")).agg(count(lit(1)).as("n_p"))
         .persistTracked()
-      val maxSuppRows = s.conf
-        .get("spark.graft.basket.broadcastMaxSuppRows", "4000000").toLong
-      val nSupp = supp.count()
-      def gatedSupp(key: String, cnt: String) =
-        graft.operators.Skew.sizeGatedBroadcast(
-          supp.withColumnRenamed("p", key).withColumnRenamed("n_p", cnt),
-          nSupp, maxSuppRows)
       val tot = it.agg(countDistinct(col("o")).as("n_orders"))
       // both directed rules explode from ONE pass over the pair census —
       // the q_pagerank symmetric-edge device; the prior self-union
@@ -90,8 +96,8 @@ object BasketOps {
           .as("r"))
         .select(col("r.lhs"), col("r.rhs"), col("r.n_ab"))
       directed
-        .join(gatedSupp("lhs", "n_lhs"), "lhs")
-        .join(gatedSupp("rhs", "n_rhs"), "rhs")
+        .join(supp.select(col("p").as("lhs"), col("n_p").as("n_lhs")), "lhs")
+        .join(supp.select(col("p").as("rhs"), col("n_p").as("n_rhs")), "rhs")
         .crossJoin(broadcast(tot))
         .select(col("lhs"), col("rhs"), col("n_ab"), col("n_lhs"),
           col("n_rhs"),
@@ -119,20 +125,12 @@ object BasketOps {
     "q_item_sim" -> ((s, d) => {
       val it = items(s, d).persistTracked()
       val pairs = coEdges(it).filter(col("n_ab") >= 2)
-      // same measured gate as q_copurchase_rules: dim-sized today, proven
-      // so per run, shuffled on the item key the day it isn't
+      // the q_copurchase_rules support census: AQE picks the join
       val supp = it.groupBy(col("p")).agg(count(lit(1)).as("n_p"))
         .persistTracked()
-      val nSupp = supp.count()
-      val maxSuppRows = s.conf
-        .get("spark.graft.basket.broadcastMaxSuppRows", "4000000").toLong
       pairs
-        .join(graft.operators.Skew.sizeGatedBroadcast(
-          supp.select(col("p").as("pa"), col("n_p").as("n_a")),
-          nSupp, maxSuppRows), "pa")
-        .join(graft.operators.Skew.sizeGatedBroadcast(
-          supp.select(col("p").as("pb"), col("n_p").as("n_b")),
-          nSupp, maxSuppRows), "pb")
+        .join(supp.select(col("p").as("pa"), col("n_p").as("n_a")), "pa")
+        .join(supp.select(col("p").as("pb"), col("n_p").as("n_b")), "pb")
         .select(col("pa"), col("pb"), col("n_ab"), col("n_a"), col("n_b"),
           (col("n_ab").cast("double") /
             sqrt((col("n_a") * col("n_b")).cast("double"))).as("sim"))
@@ -154,15 +152,7 @@ object BasketOps {
     //      supp convention); m rides as a 1-row broadcast — no driver
     //      action in the plan ----
     "q_modularity" -> ((s, d) => {
-      val e = coEdges(items(s, d)).select(col("pa"), col("pb")).persistTracked()
-      val brand = Tables(s, d, "part")
-        .select(col("p_partkey"), col("p_brand"))
-      val eb = e
-        .join(broadcast(brand.select(col("p_partkey").as("pa"),
-          col("p_brand").as("ba"))), "pa")
-        .join(broadcast(brand.select(col("p_partkey").as("pb"),
-          col("p_brand").as("bb"))), "pb")
-        .select(col("ba"), col("bb")).persistTracked()
+      val (e, eb) = brandEdges(s, d)
       val mRow = e.agg(count(lit(1)).as("m"))
       val within = eb.filter(col("ba") === col("bb"))
         .groupBy(col("ba").as("brand")).agg(count(lit(1)).as("e_c"))
@@ -187,15 +177,7 @@ object BasketOps {
     //      combined brand-keyed aggregations, m as a 1-row broadcast;
     //      all-integer φ in basis points (floor division) ----
     "q_conductance" -> ((s, d) => {
-      val e = coEdges(items(s, d)).select(col("pa"), col("pb")).persistTracked()
-      val brand = Tables(s, d, "part")
-        .select(col("p_partkey"), col("p_brand"))
-      val eb = e
-        .join(broadcast(brand.select(col("p_partkey").as("pa"),
-          col("p_brand").as("ba"))), "pa")
-        .join(broadcast(brand.select(col("p_partkey").as("pb"),
-          col("p_brand").as("bb"))), "pb")
-        .select(col("ba"), col("bb")).persistTracked()
+      val (e, eb) = brandEdges(s, d)
       val mRow = e.agg(count(lit(1)).as("m"))
       val within = eb.filter(col("ba") === col("bb"))
         .groupBy(col("ba").as("brand")).agg(count(lit(1)).as("e_within"))
@@ -228,26 +210,7 @@ object BasketOps {
     //      (wedge build + closing-edge probe), both on fine vertex keys.
     //      The oracle counts the SAME triangles by the naive id-ordered
     //      definition — proving the orientation rewrite loses nothing ----
-    "q_triangles" -> ((s, d) => {
-      val und = coEdges(items(s, d).persistTracked())
-        .select(col("pa"), col("pb")).persistTracked()
-      val (tri, _) = triangleStream(s, und)
-      val perNode = tri
-        .select(explode(array(col("u"), col("v"), col("w"))).as("part"))
-        .groupBy(col("part")).agg(count(lit(1)).as("n_tri"))
-      // the triangle total is DERIVED from the census — every triangle
-      // contributes exactly 3 participant rows, so Σ n_tri = 3·|tri| —
-      // instead of re-running the wedge join for a second global count:
-      // one wedge join where the pre-round-8 plan paid it twice (plan
-      // sharing without materialization recomputes in Spark). The
-      // unpartitioned window is bounded: its input is the VERTEX census
-      // (catalog cardinality, the same dim-sized bound as the supp
-      // broadcasts above), never the corpus-sized wedge stream
-      perNode
-        .withColumn("total_triangles", expr("sum(n_tri) over () div 3"))
-        .orderBy(col("n_tri").desc, col("part").asc)
-        .limit(10)
-    }),
+    "q_triangles" -> ((s, d) => triangles(s, d)),
 
     // ---- global clustering coefficient (transitivity): 3·|triangles| /
     //      |wedges| over the co-purchase graph — the one-number summary of
@@ -260,7 +223,7 @@ object BasketOps {
       // ONE degree census: triangleStream persists the one it builds for
       // the orientation and returns it, so the wedge denominator below
       // reads the same cache instead of re-aggregating the edge set
-      val (tri, deg) = triangleStream(s, und)
+      val (tri, deg) = triangleStream(und)
       // all-integer moments: deg·(deg−1) div 2 stays in int64 per vertex
       // and the sums ride decimal(38,0) — no double mantissa anywhere
       val gstats = deg.agg(count(lit(1)).as("n_vertices"),
@@ -277,6 +240,34 @@ object BasketOps {
             .stripMargin).as("global_cc_bp"))
     })
   )
+
+  /** Closing-edge rows the triangle probe broadcasts (4M ≈ 100 MB of
+    * longs); past it the probe is a shuffled hash join on (v, w). */
+  private[graft] val TriangleBroadcastMaxEdges = 4000000L
+
+  /** q_triangles' body; tests lower `maxBroadcastEdges` (the
+    * [[triangleStream]] probe budget) to force the shuffled probe. */
+  private[graft] def triangles(s: SparkSession, d: String,
+      maxBroadcastEdges: Long = TriangleBroadcastMaxEdges): DataFrame = {
+    val und = coEdges(items(s, d).persistTracked())
+      .select(col("pa"), col("pb")).persistTracked()
+    val (tri, _) = triangleStream(und, maxBroadcastEdges)
+    val perNode = tri
+      .select(explode(array(col("u"), col("v"), col("w"))).as("part"))
+      .groupBy(col("part")).agg(count(lit(1)).as("n_tri"))
+    // the triangle total is DERIVED from the census — every triangle
+    // contributes exactly 3 participant rows, so Σ n_tri = 3·|tri| —
+    // instead of re-running the wedge join for a second global count:
+    // one wedge join where the pre-round-8 plan paid it twice (plan
+    // sharing without materialization recomputes in Spark). The
+    // unpartitioned window is bounded: its input is the VERTEX census
+    // (catalog cardinality, the same dim-sized bound as the supp
+    // broadcasts above), never the corpus-sized wedge stream
+    perNode
+      .withColumn("total_triangles", expr("sum(n_tri) over () div 3"))
+      .orderBy(col("n_tri").desc, col("part").asc)
+      .limit(10)
+  }
 
   /** Degree-oriented (compact-forward) triangle enumeration over an
     * undirected PERSISTED edge frame (pa, pb): every edge points from its
@@ -304,12 +295,16 @@ object BasketOps {
     *    the closing-edge probe + downstream aggregation both plans share.
     *    The join keeps the smaller memory envelope, so it wins the tie.
     *  - the closing-edge probe is COUNT-GATED (Skew.sizeGatedBroadcast):
-    *    broadcast within spark.graft.triangles.broadcastMaxEdges (4M ≈
-    *    100 MB of longs), explicit shuffle_hash on (v, w) past it — the
-    *    wedge side then pays one exchange instead of every executor
-    *    holding an over-threshold relation.
+    *    broadcast within `maxBroadcastEdges` (default
+    *    [[TriangleBroadcastMaxEdges]]), explicit shuffle_hash on (v, w)
+    *    past it — the wedge side then pays one exchange instead of every
+    *    executor holding an over-threshold relation. AQE alone does not
+    *    make this choice: the cached edge set is larger than its default
+    *    broadcast threshold, and without the gate the sf0.1 probe became a
+    *    sort-merge join at 3× the task time (PLANS.md §7za).
     */
-  private def triangleStream(s: SparkSession, und: DataFrame)
+  private def triangleStream(und: DataFrame,
+      maxBroadcastEdges: Long = TriangleBroadcastMaxEdges)
       : (DataFrame, DataFrame) = {
     // vertex-sized census, PERSISTED: it feeds both orientation joins here
     // and (for q_clustering_coeff) the wedge-denominator moments — one
@@ -339,10 +334,8 @@ object BasketOps {
       .select(col("e1.dst").as("v"), col("e2.dst").as("w"),
         col("e1.src").as("u"))
     val closing = dir.select(col("src").as("c_src"), col("dst").as("c_dst"))
-    val maxBcastEdges = s.conf
-      .get("spark.graft.triangles.broadcastMaxEdges", "4000000").toLong
-    val probeSide =
-      graft.operators.Skew.sizeGatedBroadcast(closing, dir.count(), maxBcastEdges)
+    val probeSide = graft.operators.Skew.sizeGatedBroadcast(
+      closing, dir.count(), maxBroadcastEdges)
     val tri = wedge.join(probeSide,
         col("v") === col("c_src") && col("w") === col("c_dst"))
       .select(col("u"), col("v"), col("w"))

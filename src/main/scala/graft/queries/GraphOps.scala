@@ -482,23 +482,15 @@ object GraphOps {
         .select(col("pr.doc_a").as("s_a"), col("pr.doc_b").as("s_b"))
         .groupBy(col("s_a"), col("s_b")).agg(count(lit(1)).as("common"))
       // degree census is supplier-cardinality (dim-sized, the
-      // q_copurchase_rules supp bound) — but the bound is MEASURED, not
-      // assumed: the count-then-choose gate broadcasts when the census is
-      // within budget and pins shuffle_hash on the fine supplier key when
-      // a bigger catalog flips it (the q_triangles device via
-      // Skew.sizeGatedBroadcast; both branches result-identical)
+      // q_copurchase_rules supp bound): AQE reads its measured size and
+      // broadcasts it, or shuffles on the fine supplier key when a bigger
+      // catalog outgrows the threshold. The persist lets both renamed
+      // reads share one aggregation
       val deg = e.groupBy(col("sk")).agg(count(lit(1)).as("deg"))
         .persistTracked()
-      val nDeg = deg.count()
-      val maxDegRows = s.conf
-        .get("spark.graft.linkpredict.broadcastMaxDegRows", "4000000").toLong
       pairs
-        .join(graft.operators.Skew.sizeGatedBroadcast(
-          deg.select(col("sk").as("s_a"), col("deg").as("da")),
-          nDeg, maxDegRows), "s_a")
-        .join(graft.operators.Skew.sizeGatedBroadcast(
-          deg.select(col("sk").as("s_b"), col("deg").as("db")),
-          nDeg, maxDegRows), "s_b")
+        .join(deg.select(col("sk").as("s_a"), col("deg").as("da")), "s_a")
+        .join(deg.select(col("sk").as("s_b"), col("deg").as("db")), "s_b")
         .select(col("s_a"), col("s_b"), col("common").as("common_parts"),
           expr("(common * 10000) div (da + db - common)").as("jaccard_bp"))
         .orderBy(col("common_parts").desc, col("s_a").asc, col("s_b").asc)

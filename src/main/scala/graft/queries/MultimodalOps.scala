@@ -18,6 +18,9 @@ object MultimodalOps {
 
   private def docs(s: SparkSession, d: String) = Tables(s, d, "documents")
 
+  /** q_binary_source's blobs (body and oracle), in this checkout's target/. */
+  private val BlobDir = new java.io.File("target/graft_blobs").getAbsolutePath
+
   val queries: Map[String, Q] = Map(
     // ---- REAL binary-file ingestion (spark.read.format("binaryFile") —
     //      the media-lake scan path, complementing the synthesized blob
@@ -28,7 +31,7 @@ object MultimodalOps {
     //      At scale this source partitions by file and prunes on path —
     //      the binary twin of the parquet scan ----
     "q_binary_source" -> ((s, d) => {
-      val dir = new java.io.File("/root/repo/target/graft_blobs")
+      val dir = new java.io.File(BlobDir)
       dir.mkdirs()
       Seq(256, 1024, 4096).zipWithIndex.foreach { case (n, i) =>
         val bytes = Array.tabulate(n)(j => (((j * 7 + 13 + i) % 26) + 'a')
@@ -103,10 +106,10 @@ object MultimodalOps {
     // runs AFTER Verify has materialized the blobs (the q_layout_read
     // sequencing precedent); decode() is safe because the bytes are ASCII
     "q_binary_source" ->
-      """SELECT parse_filename(filename) AS fname,
+      s"""SELECT parse_filename(filename) AS fname,
         |       CAST(size AS BIGINT) AS length,
         |       md5(decode(content)) AS content_md5
-        |FROM read_blob('/root/repo/target/graft_blobs/*.bin')
+        |FROM read_blob('$BlobDir/*.bin')
         |ORDER BY fname""".stripMargin,
     "q_media_meta" ->
       """SELECT doc_id AS media_id,

@@ -65,7 +65,9 @@ object PipelineOps {
     val partId = bs.foldLeft(lit(0)) { (acc, b) =>
       acc + when(key >= lit(b), 1).otherwise(0)
     }
-    val layoutDir = System.getProperty("java.io.tmpdir") +
+    // under the session's own temp root (Spark deletes it at stop), so
+    // two JVMs laying out the same sf dir never share the directory
+    val layoutDir = org.apache.spark.SparkFiles.getRootDirectory() +
       "/graft_layout_orders_" + Integer.toHexString(d.hashCode)
     Tables(s, d, "orders")
       .withColumn("part_id", partId.cast("int"))

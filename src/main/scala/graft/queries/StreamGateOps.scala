@@ -42,6 +42,8 @@ object StreamGateOps {
   case class DedupDoc(doc_id: Long, text: String)
   case class CkDoc(doc_id: Long, text: String, source: String, n_chars: Long)
 
+  private val ReplayShufflePartitions = 4
+
   /** Feed `rows` through `pipeline` in `nBatches` doc_id-ordered
     * micro-batches; return the memory sink's final table, materialized
     * locally so the sink view can be dropped before returning.
@@ -51,8 +53,7 @@ object StreamGateOps {
     * the session default (= cores) means a ≤5k-doc gate replay pays
     * 32 state-store task commits per stateful stage per micro-batch,
     * almost all of them empty. The replay pins the stream's shuffle
-    * partitioning to `spark.graft.streamgate.shufflePartitions`
-    * (default 4, scale the conf with replay volume; production ingest
+    * partitioning to [[ReplayShufflePartitions]] (production ingest
     * uses the session default) and restores the session conf after.
     * Gated RESULTS are partitioning-invariant by construction — the fp
     * DISTINCT set and commutative modular sums — which the determinism
@@ -72,8 +73,7 @@ object StreamGateOps {
     // the confs per-thread) before interleaving work with a replay.
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     val prevRetain = s.conf.getOption("spark.sql.streaming.minBatchesToRetain")
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.streamgate.shufflePartitions", "4"))
+    s.conf.set("spark.sql.shuffle.partitions", ReplayShufflePartitions.toString)
     // a replay never recovers from a checkpoint (the temp checkpoint is
     // deleted on stop), so retaining the default 100 state versions per
     // shard only grows provider memory across benched passes

@@ -455,11 +455,11 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
   test("triangles: broadcast and shuffle closing-edge paths agree") {
     // the size-based flip (q_triangles' chooser) is a pure physical
     // decision — both paths must return identical rows in identical order
-    def rows() = q("q_triangles").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val viaBroadcast = rows()
-    val viaShuffle =
-      withConf("spark.graft.triangles.broadcastMaxEdges", "0")(rows())
+    def rows(maxBroadcastEdges: Long) =
+      graft.queries.BasketOps.triangles(spark, sf, maxBroadcastEdges).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val viaBroadcast = rows(graft.queries.BasketOps.TriangleBroadcastMaxEdges)
+    val viaShuffle = rows(0)
     assert(viaBroadcast == viaShuffle,
       s"paths diverged: $viaBroadcast vs $viaShuffle")
   }
