@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -13,13 +14,27 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Per session, each path's schema as its first load inferred it. Later
+    * loads hand it to the reader, which skips inference (footer reads,
+    * often a job) but still lists the directory. Weak keys, as in
+    * `Persisted`. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.Map[String, StructType]]()
+
   /** Load one table from an sf directory. Parquet is self-describing
     * (reference: DataSourceMeta::ParquetFile, datasource.rs:87-92), so no
     * schema declaration is needed; column pruning + predicate pushdown reach
     * the scan automatically.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]()))
+    val df = Option(memo.get(path)).fold {
+      val inferred = spark.read.parquet(path)
+      memo.put(path, inferred.schema)
+      inferred
+    }(spark.read.schema(_).parquet(path))
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as a
     // long (spark.sql.legacy.parquet.nanosAsLong=true, set in our session
     // builders). Normalize to a micros TimestampType column so query code

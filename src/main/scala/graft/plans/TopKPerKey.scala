@@ -27,10 +27,9 @@ import scala.collection.mutable
   * Memory safety (both passes hold O(bounded) task memory at ANY key
   * cardinality — the property a 100 TB input demands):
   *
-  *  - PARTIAL: the per-key heap map is capped at
-  *    `spark.graft.topk.partialMaxKeys` keys (default 65536 → ≤ cap·k rows
-  *    in flight). On overflow the pass EMITS its current heaps downstream
-  *    and resets — map-side trimming is only an optimization, so spilling
+  *  - PARTIAL: the per-key heap map is capped at `partialMaxKeys` keys
+  *    ([[TopK.PartialMaxKeys]] = 65536 → ≤ cap·k rows in flight). On
+  *    overflow the pass EMITS its current heaps downstream and resets — map-side trimming is only an optimization, so spilling
   *    untrimmed rows to the exchange is always correct. A partition whose
   *    keys are all distinct (every key holds < k rows, the adversarial
   *    case) degrades gracefully to a pass-through instead of copying the
@@ -48,20 +47,22 @@ import scala.collection.mutable
   * holds more than its cap.
   */
 case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
-    child: LogicalPlan) extends UnaryNode {
+    child: LogicalPlan, partialMaxKeys: Int = TopK.PartialMaxKeys)
+    extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
     copy(child = newChild)
 }
 
 case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
-    partial: Boolean, child: SparkPlan) extends UnaryExecNode {
+    partial: Boolean, child: SparkPlan, partialMaxKeys: Int)
+    extends UnaryExecNode {
   import org.apache.spark.sql.execution.metric.SQLMetrics
 
   override def output: Seq[Attribute] = child.output
   // numFlushes (partial pass only) is the overflow observable: 0 means the
   // key set fit the cap; a large count means the pass degraded toward a
-  // pass-through — the signal to raise partialMaxKeys or skip the partial
+  // pass-through — the signal to raise the cap or skip the partial
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext,
       "number of output rows"),
@@ -87,8 +88,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     val localK = k
     val childOutput = child.output
     val isPartial = partial
-    val maxKeys = math.max(1,
-      conf.getConfString("spark.graft.topk.partialMaxKeys", "65536").toInt)
+    val maxKeys = math.max(1, partialMaxKeys)
     val outRows = longMetric("numOutputRows")
     val flushes = longMetric("numFlushes")
     child.execute().mapPartitions { it =>
@@ -267,10 +267,10 @@ object TopKRewrite extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
 
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKey(keys, order, k, child) =>
+    case TopKPerKey(keys, order, k, child, maxKeys) =>
       TopKPerKeyExec(keys, order, k, partial = false,
         TopKPerKeyExec(keys, order, k, partial = true,
-          planLater(child))) :: Nil
+          planLater(child), maxKeys), maxKeys) :: Nil
     case _ => Nil
   }
 }
@@ -280,6 +280,9 @@ object TopKStrategy extends SparkStrategy {
   * by `graft.Context.install`.
   */
 object TopK {
+  /** The partial pass's key cap. */
+  val PartialMaxKeys: Int = 65536
+
   /** Top `k` rows per distinct value of `keys`, best-first under `order`
     * — (column name, ascending?) pairs that must form a TOTAL order
     * (include a tie-break column) or the boundary rows are
@@ -289,7 +292,13 @@ object TopK {
     * and it reaches codegen unresolved inside a foreign node.
     */
   def perKey(df: DataFrame, keys: Seq[String], order: Seq[(String, Boolean)],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = perKey(df, keys, order, k, PartialMaxKeys)
+
+  /** [[perKey]] with the partial pass's key cap lowered, so a test can
+    * force its overflow path. */
+  private[graft] def perKey(df: DataFrame, keys: Seq[String],
+      order: Seq[(String, Boolean)], k: Int,
+      partialMaxKeys: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Descending
     import org.apache.spark.sql.graftx.Bridge
     // k = 0 would surface later as an opaque NoSuchElementException on an
@@ -305,6 +314,7 @@ object TopK {
     val sortOrders = order.map { case (n, asc) =>
       SortOrder(attr(n), if (asc) Ascending else Descending)
     }
-    Bridge.ofRows(spark, TopKPerKey(keys.map(attr), sortOrders, k, analyzed))
+    Bridge.ofRows(spark,
+      TopKPerKey(keys.map(attr), sortOrders, k, analyzed, partialMaxKeys))
   }
 }

@@ -433,8 +433,9 @@ object DedupOps {
     //      threshold needs raising. Integer bp; edge counts ride the
     //      label join on fine doc ids ----
     "q_cluster_density" -> ((s, d) => {
+      // connectedComponents persists `pairs`; the edge census reads it
       val pairs = minhashPairs(docs(s, d))
-        .select(col("doc_a"), col("doc_b")).persistTracked()
+        .select(col("doc_a"), col("doc_b"))
       val cc = connectedComponents(pairs)
         .select(col("doc_id"), col("cluster_id"))
       val members = cc.groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
@@ -466,8 +467,9 @@ object DedupOps {
     //      key on fine doc ids ----
     "q_split_cluster_safe" -> ((s, d) => {
       val dd = docs(s, d).select(col("doc_id"))
+      // connectedComponents persists `pairs`; the leak audit reads it
       val pairs = minhashPairs(docs(s, d))
-        .select(col("doc_a"), col("doc_b")).persistTracked()
+        .select(col("doc_a"), col("doc_b"))
       val cc = connectedComponents(pairs)
       def lcg(c: org.apache.spark.sql.Column) =
         ((c % 2147483647L) * 1103515245L + 12345L) % 2147483647L

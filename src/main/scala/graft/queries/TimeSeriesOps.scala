@@ -805,7 +805,7 @@ object TimeSeriesOps {
 
     "q_cooks_distance" -> ((s, d) => {
       val W = Window
-      val fit = olsMonthlyFit(s, d)
+      val fit = olsMonthlyFit(s, d).persistTracked()
       val wCum = W.orderBy(col("m")).rowsBetween(Long.MinValue, 0)
       val rss = fit.withColumn("cum", sum(col("e") * col("e")).over(wCum))
         .agg(max(col("cum")).as("rss"))
@@ -1007,7 +1007,8 @@ object TimeSeriesOps {
   /** Shared monthly-OLS fit spine of q_cooks_distance and
     * q_durbin_watson: month census, exact decimal moments, slope/
     * intercept/residual/leverage in the fixed double shapes. Factored
-    * so both diagnostics read the IDENTICAL residual definition.
+    * so both diagnostics read the IDENTICAL residual definition. Only
+    * q_cooks_distance reads the fit twice, so it persists it itself.
     */
   private def olsMonthlyFit(s: SparkSession, d: String): DataFrame = {
     val m = Tables(s, d, "orders")
@@ -1032,7 +1033,6 @@ object TimeSeriesOps {
       .withColumn("h", expr("1.0 / n + " +
         "cast((n * m - sx) * (n * m - sx) as double) / " +
         "cast(n * (n * sxx - sx * sx) as double)"))
-      .persistTracked()
   }
 
   /** q_ljung_box oracle — generated with the SAME lbRho/lbQ text. */

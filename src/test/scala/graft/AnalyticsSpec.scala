@@ -370,7 +370,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
     // degrades to a pass-through — results must still equal the window
     // formulation exactly
     import org.apache.spark.sql.expressions.{Window => W}
-    withoutAQE(withConf("spark.graft.topk.partialMaxKeys", "8") {
+    withoutAQE {
       val df = spark.range(0, 5000)
         .select(col("id").as("k"),
           (col("id") * 2654435761L % 1009L).as("v"), col("id"))
@@ -378,7 +378,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
       def asSet(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val natDf = graft.plans.TopK.perKey(df, Seq("k"),
-        Seq("v" -> false, "id" -> true), 3)
+        Seq("v" -> false, "id" -> true), 3, partialMaxKeys = 8)
       val nat = asSet(natDf.collect())
       val w = W.partitionBy(col("k")).orderBy(col("v").desc, col("id").asc)
       val win = asSet(windowRef(df, w, 3))
@@ -389,7 +389,7 @@ class AnalyticsSpec extends AnyFunSuite with SparkSpec {
         .collect { case t: graft.plans.TopKPerKeyExec if t.partial => t }
         .map(_.metrics("numFlushes").value).sum
       assert(flushes > 0, "partial map never flushed under the forced cap")
-    })
+    }
   }
 
   test("TopKPerKey under order ties selects the invariant order-value multiset") {

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * isolation: a deliberately injected host-window stall must converge to
   * a min within noise of the uncontaminated value, extra passes must be
   * bounded, and clean / failed sample sets must not trigger re-runs.
-  * (No SparkSession — the policy is a pure function by design.)
+  * The stdout line the driver parses (Bench.line) is pinned here too:
+  * its key order and its fit in the driver's 2000-char tail capture.
+  * (No SparkSession — both are pure functions by design.)
   */
 class BenchPolicySpec extends AnyFunSuite {
 
@@ -45,5 +47,33 @@ class BenchPolicySpec extends AnyFunSuite {
     val out = Bench.adaptiveSamples(List(0.0005, 12.0, 11.0),
       () => fail("must not re-run a failed query"))
     assert(out.size == 3)
+  }
+
+  test("the stdout line keeps its key order and fits the 2000-char tail") {
+    // worst case for the fit: every key of the inventory, the longest
+    // names slowest (they fill the top 20) and widest-spread, and
+    // four-digit timings
+    val names = (SparkEntry.queries ++ SparkEntry.benchOnly).keys.toSeq
+      .sortBy(n => (-n.length, n))
+    val samples = names.zipWithIndex.map { case (n, i) =>
+      n -> List(9999.999 - i, 1000.0 - i / 10.0, 9000.0 - i) }.toMap
+    val results = names.sorted.map(n => n -> Bench.median(samples(n)))
+    val spreadHi = names.take(12).map(n => n -> 99.99)
+    val line = Bench.line(results, spreadHi, 3, 12.345, 6.789, 374,
+      "\"BENCH_FULL.json\"", "/root/testdata/sf0.1")
+    assert(line.length <= 2000, s"${line.length} chars")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    def keys(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
+      val it = n.fieldNames()
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    }
+    assert(keys(json) == Seq("metric", "value", "unit", "runs", "calib_s",
+      "calib_fp_s", "total_norm", "queries", "rest_n", "rest_total",
+      "spread_hi", "failed_n", "full", "sf"))
+    // the top 20 by median, slowest first, ties by name
+    assert(keys(json.get("queries")) ==
+      results.sortBy(r => (-r._2, r._1)).take(20).map(_._1))
+    assert(json.get("rest_n").asInt == names.size - 20)
+    assert(keys(json.get("spread_hi")) == spreadHi.map(_._1).sorted.take(10))
   }
 }

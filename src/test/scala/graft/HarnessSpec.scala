@@ -7,8 +7,8 @@ import graft.operators.Persisted
 import graft.plans.RollupRewrite
 
 /** The shared measurement harness: the session factory's standard confs,
-  * the release contract every runner relies on between queries, and the
-  * AQE-aware plan-shape walk.
+  * the release contract every runner relies on between queries, the
+  * metered pass's spans, and the AQE-aware plan-shape walk.
   */
 class HarnessSpec extends AnyFunSuite with SparkSpec {
 
@@ -60,5 +60,39 @@ class HarnessSpec extends AnyFunSuite with SparkSpec {
       assert(sh.scans > 0, s"no scans counted under AQE: $sh")
       assert(sh.exchanges > 0, s"no exchanges counted under AQE: $sh")
     }
+  }
+
+  private def metered(body: => org.apache.spark.sql.DataFrame): Harness.Pass = {
+    val m = Harness.meter(spark)
+    try Harness.measuredPass(spark, Some(m))(body)
+    finally m.detach()
+  }
+
+  test("a single-task stage is critical path, not scheduler time") {
+    // a stage that runs one task keeps every other core idle: its wall is
+    // the critical path, which `exec - Σtask/cores` would charge to the
+    // scheduler
+    val cores = spark.sparkContext.defaultParallelism
+    // one range partition: the scan and partial aggregate run as one task
+    val c = metered(spark.range(0L, 10000000L, 1L, 1)
+      .selectExpr("sum(hash(id)) AS h")).exec
+    assert(c.tasks > 0 && c.taskS > 0, c)
+    assert(c.critS >= c.taskS / cores, c)
+    assert(c.critS <= c.taskS, c)
+  }
+
+  test("a body's eager job is booked in the build span, not the execution's") {
+    def result(n: Long) = spark.range(0L, n, 1L, 2).selectExpr("sum(id) AS s")
+    val plain = metered(result(1000L))
+    val eager = metered {
+      val n = spark.range(0L, 1000L, 1L, 2).count()
+      result(n)
+    }
+    assert(plain.build.jobs == 0, plain)
+    assert(eager.build.jobs > 0, eager)
+    // the execution span counts the sink's jobs only
+    assert(plain.exec.jobs > 0, plain)
+    assert(eager.exec.jobs == plain.exec.jobs, eager)
+    assert(eager.exec.tasks == plain.exec.tasks, eager)
   }
 }
