@@ -146,8 +146,11 @@ object Bench {
     names.foreach(timedPass) // warm pass (failures counted here too)
     // Interleave passes round-robin (pass 0 of all queries, then pass 1, ...)
     // so per-query samples are spread across the session: a slow phase (GC,
-    // codegen-cache churn) late in the run taxes one sample of many queries
-    // instead of all samples of a few — the median then rejects it.
+    // a busy host) late in the run taxes one sample of many queries
+    // instead of all samples of a few — the median then rejects it. One
+    // round over every key generates more classes than the codegen cache
+    // holds (`Context.CodegenCacheEntries`), so most keys still recompile
+    // some of their classes in every sample.
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     // Per-block calibration track: a one-pass anchor snapshot every

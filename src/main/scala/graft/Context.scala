@@ -60,6 +60,10 @@ class Context(val spark: SparkSession) {
 }
 
 object Context {
+  /** Generated classes Spark keeps per JVM (see [[install]]): a
+    * text_vector pass needs about 155 entries. */
+  val CodegenCacheEntries = 2048
+
   /** Install every planner extension and SQL function the engine needs on
     * `spark`, once: the TopKPerKey strategy and window-top-k rewrite, the
     * rollup navigation rule (a no-op while no rollup is registered), and
@@ -71,10 +75,33 @@ object Context {
     * class's constructor and every `SparkEntry` query function.
     * Idempotent: a session plans every query with the same planner,
     * whatever ran on it before.
+    *
+    * It also fits Spark's generated code to the engine's working set, for
+    * each of two confs the session has no explicit value for (a builder,
+    * `spark-defaults` or `-Dspark.…` value always wins):
+    *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].
+    *    The JVM-wide generated-class cache (default 100 entries) is keyed
+    *    by class loader and body, so a whole-stage class takes one entry
+    *    under the driver's loader and one under the executor's, and one
+    *    text_vector pass needs about 155; at 100 every warm query
+    *    recompiles. Spark sizes the cache once, in `CodeGenerator`'s
+    *    static initialiser, from `SQLConf.get`: the value takes effect
+    *    only if this JVM has not compiled generated code yet (so on the
+    *    first session of a JVM, before its first query).
+    *  - `spark.sql.codegen.useIdInClassName` = false. Under AQE stage ids
+    *    follow the order stages finish, so the same body would carry a
+    *    different class name from run to run and miss the cache at any
+    *    size.
+    * The same code runs either way; only whether it is recompiled changes.
     */
   def install(spark: SparkSession): Unit = synchronized {
     import graft.functions.{MinHashSig, RollingHash, SimHashBits, WinnowHashes}
     import graft.plans.{RollupRewrite, TopKRewrite, TopKStrategy}
+    val conf = spark.sessionState.conf
+    Seq("spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+        "spark.sql.codegen.useIdInClassName" -> "false").foreach {
+      case (k, v) => if (!conf.contains(k)) conf.setConfString(k, v)
+    }
     val ext = spark.experimental
     if (!ext.extraStrategies.contains(TopKStrategy)) {
       ext.extraStrategies = ext.extraStrategies :+ TopKStrategy

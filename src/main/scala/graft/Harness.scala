@@ -24,9 +24,12 @@ object Harness {
 
   /** The one place a session is built: `local[cores]`, shuffle partitions =
     * cores, UTC session time, `nanosAsLong` (events.parquet carries
-    * TIMESTAMP(NANOS)), UI off, WARN logging, and the engine's planner
-    * extensions (`Context.install`). `extraConf` is applied last, so it
-    * can override a standard conf.
+    * TIMESTAMP(NANOS)), UI off, WARN logging, and `Context.install`: the
+    * engine's planner extensions, and a generated-class cache sized for
+    * its working set with stage ids kept out of class names. `extraConf`
+    * is applied last, so it can override a standard conf, the two codegen
+    * confs `install` fills in among them (the cache size only in a JVM
+    * that has not compiled generated code yet).
     */
   def session(cores: Int, extraConf: (String, String)*): SparkSession = {
     val builder = SparkSession.builder()

@@ -95,4 +95,35 @@ class HarnessSpec extends AnyFunSuite with SparkSpec {
     assert(eager.exec.jobs == plain.exec.jobs, eager)
     assert(eager.exec.tasks == plain.exec.tasks, eager)
   }
+
+  test("a warm round of text_vector's keys compiles no generated class") {
+    // the three keys compile ~155 classes a pass: a 100-entry cache, or
+    // class names carrying AQE stage ids, recompile them every round
+    val keys = Seq("q_minhash_rollup", "q_ann_pq", "q_dedup_minhash")
+    val rounds = (1 to 2).map(_ => keys.map { k =>
+      val p = metered(q(k))
+      k -> (p.build.compiles + p.exec.compiles)
+    })
+    val recompiled = rounds(1).filter(_._2 > 0)
+    assert(recompiled.isEmpty, s"(round 2's compiles; round 1: ${rounds(0)})")
+    // the meter does see compiles: an inlined literal no query used before
+    // makes a body the cache has never held
+    val fresh = metered(spark.range(1).selectExpr(s"id + ${System.nanoTime} AS x"))
+    assert(fresh.exec.compiles > 0, fresh)
+  }
+
+  test("install keeps explicit codegen confs and fills in unset ones") {
+    val (size, ids) =
+      ("spark.sql.codegen.cache.maxEntries", "spark.sql.codegen.useIdInClassName")
+    val explicit = spark.newSession()
+    explicit.sessionState.conf.setConfString(size, "64")
+    explicit.sessionState.conf.setConfString(ids, "true")
+    Context.install(explicit)
+    assert(explicit.conf.get(size) == "64")
+    assert(explicit.conf.get(ids) == "true")
+    val unset = spark.newSession()
+    Context.install(unset)
+    assert(unset.conf.get(size) == Context.CodegenCacheEntries.toString)
+    assert(unset.conf.get(ids) == "false")
+  }
 }
