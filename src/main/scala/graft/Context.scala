@@ -66,8 +66,9 @@ object Context {
 
   /** Install every planner extension and SQL function the engine needs on
     * `spark`, once: the TopKPerKey strategy and window-top-k rewrite, the
-    * rollup navigation rule (a no-op while no rollup is registered), and
-    * the console's SQL functions. The reference builds its whole planner
+    * one-partition sort of small inputs ([[graft.plans.SmallSortStrategy]]),
+    * the rollup navigation rule (a no-op while no rollup is registered),
+    * and the console's SQL functions. The reference builds its whole planner
     * in `ExecutionContext::new`; the runtime-injection twin here is
     * `spark.experimental`, because callers of `SparkEntry` (perfbench
     * among them) build their own sessions. So the install runs from the
@@ -76,9 +77,9 @@ object Context {
     * Idempotent: a session plans every query with the same planner,
     * whatever ran on it before.
     *
-    * It also fits Spark's generated code to the engine's working set, for
-    * each of two confs the session has no explicit value for (a builder,
-    * `spark-defaults` or `-Dspark.…` value always wins):
+    * It also fills in three confs the session has no explicit value for
+    * (a builder, `spark-defaults` or `-Dspark.…` value always wins). Two
+    * fit Spark's generated code to the engine's working set:
     *  - `spark.sql.codegen.cache.maxEntries` = [[CodegenCacheEntries]].
     *    The JVM-wide generated-class cache (default 100 entries) is keyed
     *    by class loader and body, so a whole-stage class takes one entry
@@ -93,18 +94,22 @@ object Context {
     *    different class name from run to run and miss the cache at any
     *    size.
     * The same code runs either way; only whether it is recompiled changes.
+    * The third, `spark.sql.ui.explainMode` = simple, stops Spark rendering
+    * a formatted plan for the UI on every SQL execution and every AQE plan
+    * update, which it does even with the UI disabled.
     */
   def install(spark: SparkSession): Unit = synchronized {
     import graft.functions.{MinHashSig, RollingHash, SimHashBits, WinnowHashes}
-    import graft.plans.{RollupRewrite, TopKRewrite, TopKStrategy}
+    import graft.plans.{RollupRewrite, SmallSortStrategy, TopKRewrite, TopKStrategy}
     val conf = spark.sessionState.conf
     Seq("spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
-        "spark.sql.codegen.useIdInClassName" -> "false").foreach {
+        "spark.sql.codegen.useIdInClassName" -> "false",
+        "spark.sql.ui.explainMode" -> "simple").foreach {
       case (k, v) => if (!conf.contains(k)) conf.setConfString(k, v)
     }
     val ext = spark.experimental
     if (!ext.extraStrategies.contains(TopKStrategy)) {
-      ext.extraStrategies = ext.extraStrategies :+ TopKStrategy
+      ext.extraStrategies = ext.extraStrategies :+ TopKStrategy :+ SmallSortStrategy
       ext.extraOptimizations =
         ext.extraOptimizations :+ TopKRewrite :+ RollupRewrite
       // ST_Point(x, y) → struct<x,y>, ST_AsText(point) → WKT; a

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftx.Bridge
 
 /** Loaders for the driver-generated parquet tables (see TESTDATA.md).
   *
@@ -14,27 +15,31 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Per session, each path's schema as its first load inferred it. Later
-    * loads hand it to the reader, which skips inference (footer reads,
-    * often a job) but still lists the directory. Weak keys, as in
-    * `Persisted`. */
-  private val schemas = new java.util.WeakHashMap[SparkSession,
-    java.util.Map[String, StructType]]()
+  /** Per session, each path's analyzed relation as its first load
+    * resolved it: the schema, and the file index with its listing. Later
+    * loads reuse it, so they neither infer the schema nor list the
+    * directory again. This holds because sf tables are read-only inputs:
+    * every caller passes an sf directory, and nothing writes into one
+    * while a session reads it. Weak keys, as in `Persisted`; the relation
+    * refers back to its session, so an entry lives as long as the JVM
+    * (the mains build one session per JVM: `Harness.session` is
+    * `getOrCreate`). */
+  private val relations = new java.util.WeakHashMap[SparkSession,
+    java.util.Map[String, LogicalRelation]]()
 
   /** Load one table from an sf directory. Parquet is self-describing
     * (reference: DataSourceMeta::ParquetFile, datasource.rs:87-92), so no
     * schema declaration is needed; column pruning + predicate pushdown reach
-    * the scan automatically.
+    * the scan automatically. Each load gets fresh expression ids
+    * (`newInstance`), so two loads in one self-join analyse as two reads.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, StructType]()))
-    val df = Option(memo.get(path)).fold {
-      val inferred = spark.read.parquet(path)
-      memo.put(path, inferred.schema)
-      inferred
-    }(spark.read.schema(_).parquet(path))
+    val memo = relations.synchronized(relations.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, LogicalRelation]()))
+    val relation = memo.computeIfAbsent(path, _ =>
+      spark.read.parquet(path).queryExecution.analyzed.asInstanceOf[LogicalRelation])
+    val df = Bridge.ofRows(spark, relation.newInstance())
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark only reads as a
     // long (spark.sql.legacy.parquet.nanosAsLong=true, set in our session
     // builders). Normalize to a micros TimestampType column so query code

@@ -112,18 +112,36 @@ class HarnessSpec extends AnyFunSuite with SparkSpec {
     assert(fresh.exec.compiles > 0, fresh)
   }
 
-  test("install keeps explicit codegen confs and fills in unset ones") {
-    val (size, ids) =
-      ("spark.sql.codegen.cache.maxEntries", "spark.sql.codegen.useIdInClassName")
+  test("install keeps explicit confs and fills in unset ones") {
+    val (size, ids, explain) = ("spark.sql.codegen.cache.maxEntries",
+      "spark.sql.codegen.useIdInClassName", "spark.sql.ui.explainMode")
     val explicit = spark.newSession()
     explicit.sessionState.conf.setConfString(size, "64")
     explicit.sessionState.conf.setConfString(ids, "true")
+    explicit.sessionState.conf.setConfString(explain, "formatted")
     Context.install(explicit)
     assert(explicit.conf.get(size) == "64")
     assert(explicit.conf.get(ids) == "true")
+    assert(explicit.conf.get(explain) == "formatted")
     val unset = spark.newSession()
     Context.install(unset)
     assert(unset.conf.get(size) == Context.CodegenCacheEntries.toString)
     assert(unset.conf.get(ids) == "false")
+    assert(unset.conf.get(explain) == "simple")
+  }
+
+  test("a table's second load in a session lists no files and gets fresh ids") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    val fresh = spark.newSession()
+    val c0 = METRIC_FILES_DISCOVERED.getCount
+    val a = Tables(fresh, sf, "nation")
+    val c1 = METRIC_FILES_DISCOVERED.getCount
+    assert(c1 > c0, "the first load discovered no files")
+    val b = Tables(fresh, sf, "nation")
+    assert(METRIC_FILES_DISCOVERED.getCount == c1, "the second load listed again")
+    val ids = Seq(a, b).map(_.queryExecution.analyzed.output.map(_.exprId).toSet)
+    assert(ids(0).intersect(ids(1)).isEmpty, ids)
+    // a self-join of the two loads matches each key once
+    assert(a.join(b, a("n_nationkey") === b("n_nationkey")).count() == a.count())
   }
 }

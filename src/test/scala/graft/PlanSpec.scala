@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.Join
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.catalyst.plans.logical.{Join, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -1112,6 +1113,79 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
             "q_minhash_rollup's self-joins no longer reuse an exchange")
         }
       } finally Harness.release(spark)
+    }
+  }
+
+  // ---- small sorts run in one partition ------------------------------------
+
+  /** perfbench sql_interactive's like_suffix shape: GROUP BY … ORDER BY. */
+  private def likeSuffix() = {
+    import org.apache.spark.sql.functions.{col, count, lit, min}
+    Tables(spark, sf, "part").where(col("p_name").like("%widget"))
+      .groupBy("p_type")
+      .agg(count(lit(1)).as("n"), min("p_retailprice").as("lo"))
+      .orderBy("p_type")
+  }
+
+  /** like_suffix's rows at sf0.001, as DuckDB answers its SQL. */
+  private val likeSuffixRows = Seq(("ECONOMY", 7L, 900.0), ("LARGE", 1L, 910.6),
+    ("MEDIUM", 1L, 908.1), ("PROMO", 7L, 901.6), ("SMALL", 8L, 902.6),
+    ("STANDARD", 3L, 900.7))
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+
+  private def rangeExchanges(plan: SparkPlan): Int = Harness.nodes(plan).count {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _ => false
+  }
+
+  private val minPartitionSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+  test("a GROUP BY … ORDER BY over a small input sorts in one partition") {
+    withConf("spark.sql.adaptive.enabled", "true") {
+      val df = likeSuffix()
+      assert(rows(df) == likeSuffixRows)
+      assert(rangeExchanges(df.queryExecution.executedPlan) == 0,
+        df.queryExecution.executedPlan)
+      // the aggregate's map job and the result job; a range sort adds the
+      // RangePartitioner's sampling job and its own map job
+      val m = Harness.meter(spark)
+      val pass = try Harness.measuredPass(spark, Some(m))(likeSuffix())
+        finally m.detach()
+      assert(pass.exec.jobs == 2, pass)
+    }
+  }
+
+  test("a sort whose input AQE would not coalesce to one partition keeps its range exchange") {
+    withConf("spark.sql.adaptive.enabled", "true") {
+      withConf(minPartitionSize, "1b") {
+        val df = likeSuffix()
+        assert(rows(df) == likeSuffixRows)
+        assert(rangeExchanges(df.queryExecution.executedPlan) == 1,
+          df.queryExecution.executedPlan)
+      }
+    }
+  }
+
+  test("a small finished stage sorts in one partition when its estimate is too large") {
+    // between like_suffix's static estimate and its aggregate's measured
+    // shuffle, so only AQE's re-plan after that stage can fire the strategy
+    val threshold = 2048L
+    val estimate = likeSuffix().queryExecution.optimizedPlan match {
+      case s: Sort => s.child.stats.sizeInBytes
+      case other => fail(s"expected a Sort root, got ${other.nodeName}")
+    }
+    assert(estimate > threshold, s"estimate $estimate fits the threshold")
+    withConf("spark.sql.adaptive.enabled", "true") {
+      withConf(minPartitionSize, s"${threshold}b") {
+        val df = likeSuffix()
+        assert(rows(df) == likeSuffixRows)
+        val adaptive = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+        assert(rangeExchanges(adaptive.initialPlan) == 1, adaptive.initialPlan)
+        assert(rangeExchanges(adaptive) == 0, adaptive)
+        assert(Harness.nodes(adaptive).exists(_.isInstanceOf[CoalesceExec]), adaptive)
+      }
     }
   }
 }
